@@ -801,7 +801,10 @@ def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     from example_beam_spark.sources.parquet import parquet_members, table_path
-    from example_beam_spark.streaming.entries import _prepare_stream_session
+    from example_beam_spark.streaming.entries import (
+        _prepare_stream_session,
+        require_no_data_batches,
+    )
 
     _prepare_stream_session(
         spark, min(8, spark.sparkContext.defaultParallelism)
@@ -855,16 +858,7 @@ def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the watermark still unset, and the final flush runs in the
     # post-watermark no-data micro-batch, cutting two ~1-2 s machinery
     # batches per drain. Requires noDataMicroBatches (default true).
-    assert (
-        spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        ).lower()
-        == "true"
-    ), (
-        "collapsed staging schedule: final sentinel flush depends on the "
-        "post-watermark no-data micro-batch, but "
-        "spark.sql.streaming.noDataMicroBatches.enabled is false"
-    )
+    require_no_data_batches(spark)
     return (
         spark.readStream.schema("doc_id long, text string, ts_us long")
         .option("maxFilesPerTrigger", 3)

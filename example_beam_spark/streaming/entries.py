@@ -165,8 +165,6 @@ def _prepare_stream_session(
             _SAVED_PROVIDER = spark.conf.get(_PROVIDER_KEY)
         except Exception:
             _SAVED_PROVIDER = None
-    from example_beam_spark.streaming.tws import ROCKSDB_PROVIDER
-
     # EBS_STATE_PROVIDER=hdfs pins the in-memory HDFS-backed default
     # instead — the kill/resume suite runs the corpus entries under BOTH
     # providers (the provider binds at checkpoint creation, so recovery
@@ -202,6 +200,9 @@ _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 _HDFS_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "HDFSBackedStateStoreProvider"
+)
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 _CHANGELOG_KEY = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
@@ -884,22 +885,13 @@ def read_events_stream_flushed(
     #   happens in Spark's post-watermark no-data micro-batch
     #   (noDataMicroBatches, default true) — the same mechanism the
     #   pre-r15 unordered path already relied on — so the drain is
-    #   2 micro-batches instead of 4. Assert the knob so a session that
+    #   2 micro-batches instead of 4. Check the knob so a session that
     #   disabled it fails loudly here, not with stranded state.
     ordered = _staged_files_time_ordered(d)
     if ordered and n_members > 1:
         trigger_files = 1
     else:
-        assert (
-            spark.conf.get(
-                "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-            ).lower()
-            == "true"
-        ), (
-            "collapsed staging schedule: final sentinel flush depends on "
-            "the post-watermark no-data micro-batch, but "
-            "spark.sql.streaming.noDataMicroBatches.enabled is false"
-        )
+        require_no_data_batches(spark)
         trigger_files = n_members + 2
     df = (
         spark.readStream.schema(schema)
@@ -907,6 +899,22 @@ def read_events_stream_flushed(
         .parquet(d)
     )
     return apply_ns_shim(df) if shim else df
+
+
+def require_no_data_batches(spark: SparkSession) -> None:
+    """A collapsed staging schedule (members and sentinels in one batch)
+    flushes its final state in the post-watermark no-data micro-batch;
+    raise if the session disabled those batches."""
+    if (
+        spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+        .lower()
+        != "true"
+    ):
+        raise RuntimeError(
+            "collapsed staging schedule: final sentinel flush depends on "
+            "the post-watermark no-data micro-batch, but "
+            "spark.sql.streaming.noDataMicroBatches.enabled is false"
+        )
 
 
 def stream_join_graph(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,22 +19,20 @@ Semantics reproduced (cites into LookupCacheDoFn.scala):
 Output rows carry ``match_status`` ('matched' | 'dlq') — the DLQ fork is
 a downstream filter (the reference's side output, P6).
 
-Scale notes: one shuffle on the join key into the StateStore partitions;
-state per key = cached dim + buffered early facts (bounded by TTL
-eviction). This is exactly the Beam plan (cogroup shuffle → keyed DoFn
-with state+timers), with Spark managing state snapshots/recovery.
+Scale notes: one shuffle on the hashed join key into the StateStore
+partitions; state per key = cached dim + buffered early facts (bounded
+by TTL eviction). This is exactly the Beam plan (cogroup shuffle → keyed
+DoFn with state+timers), with Spark managing state snapshots/recovery.
+The per-key state machine below is run by the shared bucketed driver
+(streaming/keyed_state.py: many keys per state group, emulated per-key
+event-time timer).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from datetime import datetime, timedelta
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from example_beam_spark.streaming.keyed_state import keyed_state_stream
 
 # union-row kind tags
 KIND_FACT = 0
@@ -44,279 +42,70 @@ OUT_SCHEMA = (
     "key string, fact_id string, fact_time timestamp, "
     "dim_version string, dim_time timestamp, match_status string"
 )
-STATE_SCHEMA = (
-    "dim_version string, dim_time timestamp, "
-    "buf_ids array<string>, buf_times array<timestamp>, max_seen timestamp"
-)
 
 
-def make_lookup_cache_fn(ttl_seconds: int):
-    """Build the applyInPandasWithState function for a given TTL."""
+def make_lookup_cache_kernel(ttl_seconds: int):
+    """``(on_rows, on_timer)`` of the lookup cache for ONE join key.
+    State: (dim_version, dim_time_us, buffered fact ids, buffered fact
+    times, max_seen_us); rows: (event_time_us, kind, payload) in
+    (event_time, dims-before-facts, payload) order."""
+    ttl_us = ttl_seconds * 1_000_000
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if state.hasTimedOut:
-            # GC timer fired (LookupCacheDoFn.scala:112-130): flush
-            # buffered facts to DLQ, clear cache.
-            if state.exists:
-                (dim_version, dim_time, buf_ids, buf_times, max_seen) = state.get
-                if buf_ids:
-                    yield pd.DataFrame(
-                        {
-                            "key": [k] * len(buf_ids),
-                            "fact_id": list(buf_ids),
-                            "fact_time": list(buf_times),
-                            "dim_version": [None] * len(buf_ids),
-                            "dim_time": [pd.NaT] * len(buf_ids),
-                            "match_status": ["dlq"] * len(buf_ids),
-                        }
-                    )
-            state.remove()
-            return
-
-        dim_version, dim_time, buf_ids, buf_times, max_seen = (
-            state.get if state.exists else (None, None, [], [], None)
+    def on_rows(key, rows, st, wm):
+        dim_version, dim_time, buf_ids, buf_times, max_seen = st or (
+            None, None, (), (), None,
         )
-        buf_ids, buf_times = list(buf_ids or []), list(buf_times or [])
-        out_rows: list[dict] = []
-
-        # deterministic replay order: event time, then dims before facts,
-        # then payload (the micro-batch may contain both sides unordered)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(
-            ["event_time", "kind", "payload"], kind="mergesort"
-        ).reset_index(drop=True)
-
-        for r in rows.itertuples(index=False):
-            ts = r.event_time
+        buf_ids, buf_times = list(buf_ids), list(buf_times)
+        out = []
+        for ts, kind, payload in rows:
             max_seen = ts if max_seen is None or ts > max_seen else max_seen
-            if r.kind == KIND_DIM:
+            if kind == KIND_DIM:
                 # latest-wins cache update (:132-161)
                 if (
                     dim_time is None
                     or ts > dim_time
-                    or (ts == dim_time and str(r.payload) > str(dim_version))
+                    or (ts == dim_time and str(payload) > str(dim_version))
                 ):
-                    dim_version, dim_time = r.payload, ts
+                    dim_version, dim_time = payload, ts
                 # flush buffered early facts (:162-173)
-                for fid, fts in zip(buf_ids, buf_times):
-                    out_rows.append(
-                        dict(
-                            key=k,
-                            fact_id=fid,
-                            fact_time=fts,
-                            dim_version=dim_version,
-                            dim_time=dim_time,
-                            match_status="matched",
-                        )
-                    )
+                out += [
+                    (key, fid, fts, dim_version, dim_time, "matched")
+                    for fid, fts in zip(buf_ids, buf_times)
+                ]
                 buf_ids, buf_times = [], []
-            else:  # fact
-                if dim_time is not None and (ts - dim_time) <= timedelta(
-                    seconds=ttl_seconds
-                ):
-                    out_rows.append(
-                        dict(
-                            key=k,
-                            fact_id=r.payload,
-                            fact_time=ts,
-                            dim_version=dim_version,
-                            dim_time=dim_time,
-                            match_status="matched",
-                        )
-                    )
-                else:
-                    buf_ids.append(r.payload)
-                    buf_times.append(ts)
+            elif dim_time is not None and ts - dim_time <= ttl_us:
+                out.append((key, payload, ts, dim_version, dim_time, "matched"))
+            else:  # early fact: buffer until a dim arrives or the GC fires
+                buf_ids.append(payload)
+                buf_times.append(ts)
+        # GC timer reset to max-seen + TTL (:190-210, MaxInstantFn)
+        deadline = max((max_seen + ttl_us) // 1000, wm + 1)
+        return (dim_version, dim_time, buf_ids, buf_times, max_seen), deadline, out
 
-        state.update((dim_version, dim_time, buf_ids, buf_times, max_seen))
-        # GC timer reset to max-seen + TTL (:190-210, MaxInstantFn); must be
-        # strictly above the current watermark or Spark rejects it.
-        if max_seen is not None:
-            expiry: datetime = max_seen + timedelta(seconds=ttl_seconds)
-            state.setTimeoutTimestamp(
-                max(int(expiry.timestamp() * 1000), state.getCurrentWatermarkMs() + 1)
-            )
-        if out_rows:
-            yield pd.DataFrame(out_rows)
+    def on_timer(key, st, wm):
+        # GC timer fired (:112-130): flush buffered facts to DLQ, clear cache
+        return None, None, [
+            (key, fid, fts, None, None, "dlq") for fid, fts in zip(st[2], st[3])
+        ]
 
-    return fn
+    return on_rows, on_timer
 
 
-def make_lookup_cache_bucketed_fn(ttl_seconds: int):
-    """Hash-bucketed twin of :func:`make_lookup_cache_fn` — many keys per
-    state group, one pickled dict per bucket, same per-key semantics.
-
-    Unlike the repeat kernel, the GC flush here only happens on timer
-    expiry, so the bucket EMULATES the per-key event-time timer (the
-    custom-window discipline, streaming/custom_window.py): each entry
-    stores its deadline (the per-key form's setTimeoutTimestamp value,
-    max(max_seen + TTL, wm+1)); a key WITH data in a batch never runs
-    its GC that batch (gsts: data suppresses the timer); a key without
-    data GCs iff its stored deadline < the batch watermark (the
-    engine's strictly-greater rule); the bucket timer is the min over
-    deadlines. Every key therefore flushes to the DLQ in exactly the
-    micro-batch its per-key timer would have fired — pinned by the
-    replay scenarios (impl='bucketed') and the corpus oracle."""
-    import pickle
-
-    ttl = timedelta(seconds=ttl_seconds)
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        st_map: dict = pickle.loads(state.get[0]) if state.exists else {}
-        out_rows: list[dict] = []
-        data_keys: set = set()
-
-        batches = [p for p in pdfs if len(p)]
-        if batches:
-            rows = pd.concat(batches, ignore_index=True)
-            # same deterministic replay order as the per-key form; the
-            # stable global sort gives every key its rows in the same
-            # relative order the per-key kernel saw
-            rows = rows.sort_values(
-                ["event_time", "kind", "payload"], kind="mergesort"
-            ).reset_index(drop=True)
-            for r in rows.itertuples(index=False):
-                k = r.key
-                data_keys.add(k)
-                dim_version, dim_time, buf_ids, buf_times, max_seen, _dl = (
-                    st_map.get(k) or (None, None, [], [], None, None)
-                )
-                ts = r.event_time
-                max_seen = ts if max_seen is None or ts > max_seen else max_seen
-                if r.kind == KIND_DIM:
-                    if (
-                        dim_time is None
-                        or ts > dim_time
-                        or (ts == dim_time and str(r.payload) > str(dim_version))
-                    ):
-                        dim_version, dim_time = r.payload, ts
-                    for fid, fts in zip(buf_ids, buf_times):
-                        out_rows.append(
-                            dict(
-                                key=k,
-                                fact_id=fid,
-                                fact_time=fts,
-                                dim_version=dim_version,
-                                dim_time=dim_time,
-                                match_status="matched",
-                            )
-                        )
-                    buf_ids, buf_times = [], []
-                else:  # fact
-                    if dim_time is not None and (ts - dim_time) <= ttl:
-                        out_rows.append(
-                            dict(
-                                key=k,
-                                fact_id=r.payload,
-                                fact_time=ts,
-                                dim_version=dim_version,
-                                dim_time=dim_time,
-                                match_status="matched",
-                            )
-                        )
-                    else:
-                        buf_ids = buf_ids + [r.payload]
-                        buf_times = buf_times + [ts]
-                st_map[k] = (
-                    dim_version, dim_time, buf_ids, buf_times, max_seen, None,
-                )
-            for k in data_keys:
-                ent = st_map[k]
-                expiry_ms = int((ent[4] + ttl).timestamp() * 1000)
-                st_map[k] = (*ent[:5], max(expiry_ms, wm + 1))
-
-        # GC phase: keys WITHOUT data whose emulated timer passed
-        for k in [k for k in st_map if k not in data_keys]:
-            ent = st_map[k]
-            if ent[5] is None or not (ent[5] < wm):
-                continue
-            for fid, fts in zip(ent[2], ent[3]):
-                out_rows.append(
-                    dict(
-                        key=k,
-                        fact_id=fid,
-                        fact_time=fts,
-                        dim_version=None,
-                        dim_time=pd.NaT,
-                        match_status="dlq",
-                    )
-                )
-            del st_map[k]
-
-        if st_map:
-            state.update((pickle.dumps(st_map),))
-            state.setTimeoutTimestamp(
-                max(min(ent[5] for ent in st_map.values()), wm + 1)
-            )
-        elif state.exists:
-            state.remove()
-
-        if out_rows:
-            df = pd.DataFrame(out_rows)
-            df["fact_time"] = pd.to_datetime(df["fact_time"])
-            df["dim_time"] = pd.to_datetime(df["dim_time"])
-            yield df
-
-    return fn
-
-
-def lookup_cache_join_stream(
-    union_stream: DataFrame, ttl_seconds: int, impl: str | None = None
-) -> DataFrame:
+def lookup_cache_join_stream(union_stream: DataFrame, ttl_seconds: int) -> DataFrame:
     """Apply the stateful join to a pre-unioned keyed stream with columns
     (key string, kind int {0=fact,1=dim}, payload string, event_time
     timestamp) — the analog of the reference's cogroup input
     (LookupCacheDoFn.scala:34). The stream must already carry a watermark
-    (it drives both late-row drop and the GC timeout).
-
-    ``impl``: 'gsts' (applyInPandasWithState, default) or 'tws'
-    (transformWithState named state + timers — see streaming/tws.py) or
-    'bucketed' (hash-bucketed gsts — the default: same per-key
-    semantics, ~8× fewer group dispatches and state rows, see
-    :func:`make_lookup_cache_bucketed_fn`); defaults to the
-    SPARK_GRAFT_STATEFUL_IMPL env var, then 'bucketed'."""
-    import os
-
-    from example_beam_spark.streaming.tws import lookup_cache_join_tws, stateful_impl
-
-    impl = impl or os.environ.get("SPARK_GRAFT_STATEFUL_IMPL") or "bucketed"
-    if impl == "tws":
-        return lookup_cache_join_tws(union_stream, ttl_seconds)
-    if impl == "bucketed":
-        from pyspark.sql import functions as F
-
-        spark = union_stream.sparkSession
-        n_buckets = int(
-            os.environ.get(
-                "EBS_LOOKUP_BUCKETS",
-                8 * spark.sparkContext.defaultParallelism,
-            )
-        )
-        bucketed = union_stream.withColumn(
-            "_bkt", F.pmod(F.xxhash64("key"), F.lit(n_buckets))
-        )
-        return bucketed.groupBy("_bkt").applyInPandasWithState(
-            make_lookup_cache_bucketed_fn(ttl_seconds),
-            outputStructType=OUT_SCHEMA,
-            stateStructType="pkl binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    stateful_impl(impl)  # validate
-    return union_stream.groupBy("key").applyInPandasWithState(
-        make_lookup_cache_fn(ttl_seconds),
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    (it drives both late-row drop and the GC timeout)."""
+    on_rows, on_timer = make_lookup_cache_kernel(ttl_seconds)
+    return keyed_state_stream(
+        union_stream,
+        key_cols=("key",),
+        row_cols=("event_time", "kind", "payload"),
+        # deterministic replay order: event time, then dims before facts,
+        # then payload (the micro-batch may contain both sides unordered)
+        order_by=("event_time", "kind", "payload"),
+        on_rows=on_rows,
+        on_timer=on_timer,
+        out_schema=OUT_SCHEMA,
     )

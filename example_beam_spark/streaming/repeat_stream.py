@@ -43,26 +43,22 @@ The oracle below reproduces exactly this with a recursive CTE over
 CHAINS (not ticks — chains per key are few) + a generate_series tick
 expansion, so the streaming output is value-compared per emission row.
 
-Scale notes (100 TB): one shuffle on the key into state-store
+Scale notes (100 TB): one shuffle on the hashed key into state-store
 partitions; per-key state is FOUR SCALARS (next tick, cached element
 id/ts/value) — the bounded-state discipline of RepeatDoFn.scala:52-58
 — and eager in-order tick firing means the state never buffers
-elements. Arrow-batched per key group; chains all die within ttl of
-the last element, so the drain ends with zero state rows.
+elements. The per-key machine below is run by the shared bucketed
+driver (streaming/keyed_state.py); chains all die within ttl of the
+last element, so the drain ends with zero state rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from example_beam_spark.registry import register
+from example_beam_spark.streaming.keyed_state import keyed_state_stream
 
 REPEAT_INTERVAL_SECS = 12 * 3600
 REPEAT_TTL_SECS = 36 * 3600
@@ -73,201 +69,71 @@ OUT_SCHEMA = (
     "user_id long, emit_ts timestamp, src_event_id long, src_ts timestamp, "
     "value double, kind string"
 )
-# next_tick: the scheduled timer; cache_*: the latest element (RepeatDoFn
-# CacheKey + LastSeenKey collapsed — lastSeen IS cache_t)
-STATE_SCHEMA = "next_tick long, cache_t long, cache_id long, cache_val double"
 
 
-def _advance_user(rows, ent, wm_us: int, emit) -> tuple | None:
-    """The RepeatDoFn state machine for ONE user, shared verbatim by the
-    per-key and bucketed kernels: process ``rows`` (sorted (ts_us,
-    event_id, value) triples), firing every grid point strictly before
-    each element (final under in-order delivery — all later elements
-    have ts >= t), then fire the grid points the watermark has passed
-    (final even with no element behind them: elements with ts < wm
-    would be late-dropped; a ts == wm straggler keeps the strict '<'
-    honest). Returns the surviving state tuple or None (chain died)."""
+def _on_rows(user_id: int, rows, ent, wm_ms: int):
+    """The RepeatDoFn state machine for ONE user: process ``rows``
+    ((ts_us, event_id, value) in (ts, event_id) order), firing every
+    grid point strictly before each element (final under in-order
+    delivery — all later elements have ts >= t), then fire the grid
+    points the watermark has passed (final even with no element behind
+    them: elements with ts < wm would be late-dropped; a ts == wm
+    straggler keeps the strict '<' honest). State: (next_tick, cache_t,
+    cache_id, cache_val) — RepeatDoFn's CacheKey + LastSeenKey collapsed
+    (lastSeen IS cache_t) — or None once the chain died. The deadline is
+    the next tick in ms: ``next_tick // 1000 < wm_ms`` exactly when the
+    watermark has passed the tick."""
+    wm_us = wm_ms * 1000
+    out = []
     alive = ent is not None
     next_tick = cache_t = cache_id = cache_val = None
     if alive:
         next_tick, cache_t, cache_id, cache_val = ent
 
     for t, eid, val in rows:
-        t, eid, val = int(t), int(eid), float(val)
         if alive:
             while next_tick < t:
-                emit(next_tick, cache_t, cache_id, cache_val, "repeat")
+                out.append((user_id, next_tick, cache_id, cache_t, cache_val, "repeat"))
                 if next_tick < cache_t + _TTL_US:
                     next_tick += _I_US
                 else:
                     alive = False  # death tick emitted, state cleared
                     break
         if not alive:
-            emit(t, t, eid, val, "initial")
+            out.append((user_id, t, eid, t, val, "initial"))
             next_tick = t + _I_US
             alive = True
         cache_t, cache_id, cache_val = t, eid, val
 
     if alive:
         while next_tick < wm_us:
-            emit(next_tick, cache_t, cache_id, cache_val, "repeat")
+            out.append((user_id, next_tick, cache_id, cache_t, cache_val, "repeat"))
             if next_tick < cache_t + _TTL_US:
                 next_tick += _I_US
             else:
                 alive = False
                 break
 
-    return (next_tick, cache_t, cache_id, cache_val) if alive else None
+    if not alive:
+        return None, None, out
+    return (next_tick, cache_t, cache_id, cache_val), next_tick // 1000, out
 
 
-def _out_frame(out: list[tuple]) -> pd.DataFrame:
-    df = pd.DataFrame(
-        out,
-        columns=["user_id", "emit_us", "src_event_id", "src_us", "value", "kind"],
-    )
-    return pd.DataFrame(
-        {
-            "user_id": df["user_id"].astype("int64"),
-            "emit_ts": pd.to_datetime(df["emit_us"], unit="us"),
-            "src_event_id": df["src_event_id"].astype("int64"),
-            "src_ts": pd.to_datetime(df["src_us"], unit="us"),
-            "value": df["value"].astype("float64"),
-            "kind": df["kind"],
-        }
-    )
+def _on_timer(user_id: int, ent, wm_ms: int):
+    return _on_rows(user_id, (), ent, wm_ms)
 
 
-def _repeat_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    out: list[tuple] = []
-
-    def emit(emit_us: int, src_t: int, src_id: int, src_val: float, kind: str):
-        out.append((user_id, emit_us, src_id, src_t, src_val, kind))
-
-    rows: list[tuple[int, int, float]] = []
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        ts_us = pdf["event_time"].astype("int64") // 1000
-        rows += list(zip(ts_us, pdf["event_id"], pdf["value"]))
-    rows.sort()
-
-    wm_us = state.getCurrentWatermarkMs() * 1000
-    ent = _advance_user(rows, state.get if state.exists else None, wm_us, emit)
-
-    if ent is not None:
-        state.update(ent)
-        # fire when the watermark passes the tick; gsts requires the
-        # timeout strictly above the current watermark (the documented
-        # clamp) — an early ms-granularity firing just re-schedules
-        state.setTimeoutTimestamp(
-            max(ent[0] // 1000, state.getCurrentWatermarkMs() + 1)
-        )
-    elif state.exists:
-        state.remove()
-
-    if out:
-        yield _out_frame(out)
-
-
-def _repeat_bucketed_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Hash-bucketed twin of :func:`_repeat_fn` — many users per state
-    group, one pickled dict user_id -> state tuple per bucket.
-
-    Equivalence needs no per-user timer emulation: the per-user machine
-    fires exactly the grid points the CURRENT watermark has passed and
-    is a no-op otherwise, so running it for every bucket member on any
-    invocation emits precisely what the per-key timers would have
-    emitted in the same micro-batch (the watermark only changes between
-    batches). The bucket timer is the min over members' next ticks, so
-    the bucket is invoked in every batch where any member's per-key
-    timer would have fired. Pinned by the same schedule tests and the
-    recursive-CTE oracle as the per-key form."""
-    import pickle
-
-    st_map: dict = pickle.loads(state.get[0]) if state.exists else {}
-    out: list[tuple] = []
-    wm_us = state.getCurrentWatermarkMs() * 1000
-
-    rows_by_user: dict[int, list] = {}
-    for pdf in pdfs:
-        if len(pdf) == 0:
-            continue
-        ts_us = pdf["event_time"].astype("int64") // 1000
-        for u, t, e, v in zip(
-            pdf["user_id"], ts_us, pdf["event_id"], pdf["value"]
-        ):
-            rows_by_user.setdefault(int(u), []).append(
-                (int(t), int(e), float(v))
-            )
-
-    for uid in sorted(set(st_map) | set(rows_by_user)):
-        def emit(emit_us, src_t, src_id, src_val, kind, _uid=uid):
-            out.append((_uid, emit_us, src_id, src_t, src_val, kind))
-
-        rows = sorted(rows_by_user.get(uid, ()))
-        ent = _advance_user(rows, st_map.get(uid), wm_us, emit)
-        if ent is not None:
-            st_map[uid] = ent
-        elif uid in st_map:
-            del st_map[uid]
-
-    if st_map:
-        state.update((pickle.dumps(st_map),))
-        min_tick_ms = min(v[0] for v in st_map.values()) // 1000
-        state.setTimeoutTimestamp(
-            max(min_tick_ms, state.getCurrentWatermarkMs() + 1)
-        )
-    elif state.exists:
-        state.remove()
-
-    if out:
-        yield _out_frame(out)
-
-
-def repeat_latest_stream(elements: DataFrame, impl: str | None = None) -> DataFrame:
+def repeat_latest_stream(elements: DataFrame) -> DataFrame:
     """RepeatDoFn over a keyed element stream: ``elements`` needs
-    (user_id, event_time, event_id, value) + a watermark.
-
-    ``impl``: 'bucketed' (default — hash-bucketed state groups, ~8×
-    fewer applyInPandasWithState dispatches and state rows, identical
-    emissions; see _repeat_bucketed_fn) or 'gsts' (one state group per
-    user). SPARK_GRAFT_STATEFUL_IMPL overrides, like the custom window."""
-    import os
-
-    impl = impl or os.environ.get("SPARK_GRAFT_STATEFUL_IMPL") or "bucketed"
-    if impl in ("bucketed",):
-        spark = elements.sparkSession
-        n_buckets = int(
-            os.environ.get(
-                "EBS_REPEAT_BUCKETS",
-                8 * spark.sparkContext.defaultParallelism,
-            )
-        )
-        bucketed = elements.withColumn(
-            "_bkt", F.pmod(F.xxhash64("user_id"), F.lit(n_buckets))
-        )
-        return bucketed.groupBy("_bkt").applyInPandasWithState(
-            _repeat_bucketed_fn,
-            outputStructType=OUT_SCHEMA,
-            stateStructType="pkl binary",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    return elements.groupBy("user_id").applyInPandasWithState(
-        _repeat_fn,
-        outputStructType=OUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    (user_id, event_time, event_id, value) + a watermark."""
+    return keyed_state_stream(
+        elements,
+        key_cols=("user_id",),
+        row_cols=("event_time", "event_id", "value"),
+        order_by=("event_time", "event_id", "value"),
+        on_rows=_on_rows,
+        on_timer=_on_timer,
+        out_schema=OUT_SCHEMA,
     )
 
 

@@ -35,7 +35,7 @@ def state_provider(request, spark):
     if request.param == "hdfs":
         yield request.param
         return
-    from example_beam_spark.streaming.tws import ROCKSDB_PROVIDER
+    from example_beam_spark.streaming.entries import ROCKSDB_PROVIDER
 
     try:
         prev = spark.conf.get(_PROVIDER_KEY)

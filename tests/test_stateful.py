@@ -23,9 +23,11 @@ from example_beam_spark.streaming.lookup_cache import (
 
 # union-stream schema for the lookup-cache join (cogroup analog)
 
-# Slow lane (replay scenarios: ~30-50 s of micro-batch machinery each) — skipped unless EBS_RUN_SLOW=1 so the external
-# verify pytest run completes; see pytest.ini / conftest.py.
-pytestmark = pytest.mark.slow
+# Slow lane (replay scenarios: ~30-50 s of micro-batch machinery each) —
+# skipped unless EBS_RUN_SLOW=1 so the default verify run completes; see
+# pytest.ini / conftest.py. One scenario per keyed kernel stays in the
+# default lane, so the default run exercises the default code path.
+slow = pytest.mark.slow
 
 UNION_SCHEMA = T.StructType(
     [
@@ -39,41 +41,6 @@ UNION_SCHEMA = T.StructType(
 TTL = 3600  # 1h, the reference's default (ScreenGlobalWindow...Enricher.scala:15)
 
 
-@pytest.fixture(params=["gsts", "tws", "bucketed"])
-def impl(request, spark):
-    """Run every lookup-cache / custom-window scenario against ALL
-    stateful implementations: 'gsts' (applyInPandasWithState), 'tws'
-    (transformWithState named state + timers, streaming/tws.py), and
-    'bucketed' (the custom window's hash-bucketed gsts twin — the
-    lookup-cache scenarios treat it as gsts, see stateful_impl). The tws
-    param skips — with the exact reason — where the container lacks the
-    protobuf runtime PySpark's transformWithState client requires."""
-    if request.param == "tws":
-        from example_beam_spark.streaming.tws import (
-            ROCKSDB_PROVIDER,
-            tws_unavailable_reason,
-        )
-
-        reason = tws_unavailable_reason()
-        if reason is not None:
-            pytest.skip(f"tws impl unavailable in this container: {reason}")
-        key = "spark.sql.streaming.stateStore.providerClass"
-        try:
-            prev = spark.conf.get(key)
-        except Exception:
-            prev = None
-        spark.conf.set(key, ROCKSDB_PROVIDER)
-        try:
-            yield "tws"
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-    else:
-        yield request.param
-
-
 def _screen(sid: str, pub: str = "p1") -> dict:
     return {"key": pub, "kind": KIND_FACT, "payload": sid}
 
@@ -82,13 +49,8 @@ def _publication(version: str, pub: str = "p1") -> dict:
     return {"key": pub, "kind": KIND_DIM, "payload": version}
 
 
-def _lookup_query(impl):
-    def build(stream):
-        return lookup_cache_join_stream(
-            watermark_then_filter(stream, 0), ttl_seconds=TTL, impl=impl
-        )
-
-    return build
+def _lookup_query(stream):
+    return lookup_cache_join_stream(watermark_then_filter(stream, 0), ttl_seconds=TTL)
 
 
 def _run(spark, sc, build, delay=0, mode="append"):
@@ -99,7 +61,8 @@ def _run(spark, sc, build, delay=0, mode="append"):
     ]
 
 
-def test_lookup_screen_after_publication_matches(spark, impl):
+@slow
+def test_lookup_screen_after_publication_matches(spark):
     """LookupCacheEnricherTest.scala:28-42: screen arriving after its
     publication is enriched immediately."""
     sc = (
@@ -108,13 +71,14 @@ def test_lookup_screen_after_publication_matches(spark, impl):
         .add_elements_at("12:00:01", _screen("s1"))
         .advance_watermark_to_infinity()
     )
-    out = _run(spark, sc, _lookup_query(impl))
+    out = _run(spark, sc, _lookup_query)
     assert [(r["fact_id"], r["dim_version"], r["match_status"]) for r in out] == [
         ("s1", "v1", "matched")
     ]
 
 
-def test_lookup_early_screen_buffered_then_flushed(spark, impl):
+@slow
+def test_lookup_early_screen_buffered_then_flushed(spark):
     """LookupCacheEnricherTest.scala:44-59: screen arrives BEFORE the
     publication → buffered, emitted when the publication shows up."""
     sc = (
@@ -124,12 +88,12 @@ def test_lookup_early_screen_buffered_then_flushed(spark, impl):
         .add_elements_at("12:20:00", _publication("v1"))
         .advance_watermark_to_infinity()
     )
-    out = _run(spark, sc, _lookup_query(impl))
+    out = _run(spark, sc, _lookup_query)
     matched = [r for r in out if r["match_status"] == "matched"]
     assert [(r["fact_id"], r["dim_version"]) for r in matched] == [("s1", "v1")]
 
 
-def test_lookup_ttl_expiry_flushes_to_dlq(spark, impl):
+def test_lookup_ttl_expiry_flushes_to_dlq(spark):
     """LookupCacheEnricherTest.scala:78-92: no publication within TTL →
     buffered screen expires to the DLQ."""
     sc = (
@@ -138,11 +102,12 @@ def test_lookup_ttl_expiry_flushes_to_dlq(spark, impl):
         .advance_watermark_to("14:00:00")  # past 12:00 + 1h TTL
         .advance_watermark_to_infinity()
     )
-    out = _run(spark, sc, _lookup_query(impl))
+    out = _run(spark, sc, _lookup_query)
     assert [(r["fact_id"], r["match_status"]) for r in out] == [("s1", "dlq")]
 
 
-def test_lookup_latest_publication_wins(spark, impl):
+@slow
+def test_lookup_latest_publication_wins(spark):
     """LookupCacheEnricherTest.scala:114-133: two versions, later
     event-time wins regardless of arrival order."""
     sc = (
@@ -152,11 +117,12 @@ def test_lookup_latest_publication_wins(spark, impl):
         .add_elements_at("12:00:02", _screen("s1"))
         .advance_watermark_to_infinity()
     )
-    out = _run(spark, sc, _lookup_query(impl))
+    out = _run(spark, sc, _lookup_query)
     assert [(r["fact_id"], r["dim_version"]) for r in out] == [("s1", "v2")]
 
 
-def test_lookup_expired_cache_not_matched(spark, impl):
+@slow
+def test_lookup_expired_cache_not_matched(spark):
     """Publication older than TTL relative to the screen is not served
     from the cache (screen buffered → DLQ at GC)."""
     sc = (
@@ -165,7 +131,7 @@ def test_lookup_expired_cache_not_matched(spark, impl):
         .add_elements_at("13:30:00", _screen("s1"))  # 90 min later > 1h TTL
         .advance_watermark_to_infinity()
     )
-    out = _run(spark, sc, _lookup_query(impl))
+    out = _run(spark, sc, _lookup_query)
     assert [(r["fact_id"], r["match_status"]) for r in out] == [("s1", "dlq")]
 
 
@@ -180,15 +146,14 @@ def _ad_event(action: str, ad="ad1", screen="s1") -> dict:
     return {"ad_id": ad, "screen_id": screen, "action": action}
 
 
-def _custom_query(stream, lateness=0, delay=0, impl=None):
+def _custom_query(stream, lateness=0, delay=0):
     return ad_ctr_custom_window_stream(
         watermark_then_filter(stream, delay),
         allowed_lateness_secs=lateness,
-        impl=impl,
     )
 
 
-def _run_ad(spark, sc, impl, lateness=0, delay=0):
+def _run_ad(spark, sc, lateness=0, delay=0):
     """``delay`` holds Spark's auto-advancing watermark back (Beam's
     TestStream watermark only moves when scripted; Spark's trails the max
     event time minus the delay — scenarios that rely on the watermark NOT
@@ -201,7 +166,7 @@ def _run_ad(spark, sc, impl, lateness=0, delay=0):
             spark,
             sc,
             schemas.AD_EVENT,
-            lambda s: _custom_query(s, lateness, delay, impl),
+            lambda s: _custom_query(s, lateness, delay),
             delay,
             output_mode="append",
         )
@@ -209,7 +174,8 @@ def _run_ad(spark, sc, impl, lateness=0, delay=0):
     ]
 
 
-def test_custom_window_impression_then_click_on_time(spark, impl):
+@slow
+def test_custom_window_impression_then_click_on_time(spark):
     """AdCtrCustomWindowCalculatorTest.scala:30-49 'Impression and then
     click on-time': one merged window, CTR 1.0, end pinned to click time
     (low-latency emission just after the click)."""
@@ -219,7 +185,7 @@ def test_custom_window_impression_then_click_on_time(spark, impl):
         .add_elements_at("12:00:01", _ad_event("click"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl)
+    out = _run_ad(spark, sc)
     assert len(out) == 1
     r = out[0]
     assert (r["clicks"], r["impressions"], r["ctr"]) == (1, 1, 1.0)
@@ -227,7 +193,8 @@ def test_custom_window_impression_then_click_on_time(spark, impl):
     assert r["window_end"] == t("12:00:01").replace(tzinfo=None)
 
 
-def test_custom_window_click_then_impression_on_time(spark, impl):
+@slow
+def test_custom_window_click_then_impression_on_time(spark):
     """AdCtrCustomWindowCalculatorTest.scala:97-110 'Click and then
     impression on-time': forClick looks FORWARD [t, t+1min); the
     impression at t+1s merges and the pane emits CTR 1.0 at the
@@ -238,7 +205,7 @@ def test_custom_window_click_then_impression_on_time(spark, impl):
         .add_elements_at("12:00:01", _ad_event("impression"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl)
+    out = _run_ad(spark, sc)
     assert len(out) == 1
     r = out[0]
     assert (r["clicks"], r["impressions"], r["ctr"]) == (1, 1, 1.0)
@@ -246,7 +213,8 @@ def test_custom_window_click_then_impression_on_time(spark, impl):
     assert r["window_end"] == t("12:00:01").replace(tzinfo=None)
 
 
-def test_custom_window_impression_then_late_click(spark, impl):
+@slow
+def test_custom_window_impression_then_late_click(spark):
     """AdCtrCustomWindowCalculatorTest.scala:51-70 'Impression and then
     late click': impression window expires at +10 min with CTR 0.0; the
     late click forms its own 1-min window emitting CTR undefined."""
@@ -257,7 +225,7 @@ def test_custom_window_impression_then_late_click(spark, impl):
         .add_elements_at("12:11:00", _ad_event("click"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl)
+    out = _run_ad(spark, sc)
     got = sorted(
         (r["window_end"].isoformat(), r["clicks"], r["impressions"], r["ctr"])
         for r in out
@@ -268,7 +236,8 @@ def test_custom_window_impression_then_late_click(spark, impl):
     ]
 
 
-def test_custom_window_late_click_within_allowed_lateness(spark, impl):
+@slow
+def test_custom_window_late_click_within_allowed_lateness(spark):
     """AdCtrCustomWindowCalculatorTest.scala:72-95 'Impression and then
     late click but in allowed lateness': on-time pane CTR 0.0, then the
     late click merges into the retained window and re-fires the
@@ -280,7 +249,7 @@ def test_custom_window_late_click_within_allowed_lateness(spark, impl):
         .add_elements_at("12:11:00", _ad_event("click"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl, lateness=120)
+    out = _run_ad(spark, sc, lateness=120)
     got = [
         (r["window_end"].isoformat(), r["clicks"], r["impressions"], r["ctr"])
         for r in out
@@ -291,7 +260,8 @@ def test_custom_window_late_click_within_allowed_lateness(spark, impl):
     ]
 
 
-def test_custom_window_click_then_late_impression(spark, impl):
+@slow
+def test_custom_window_click_then_late_impression(spark):
     """AdCtrCustomWindowCalculatorTest.scala:112-133 'Click and then late
     impression': click window expires at +1 min (CTR undefined); the late
     impression forms its own 10-min window (CTR 0.0)."""
@@ -302,7 +272,7 @@ def test_custom_window_click_then_late_impression(spark, impl):
         .add_elements_at("12:02:00", _ad_event("impression"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl)
+    out = _run_ad(spark, sc)
     got = sorted(
         (r["window_end"].isoformat(), r["clicks"], r["impressions"], r["ctr"])
         for r in out
@@ -313,7 +283,8 @@ def test_custom_window_click_then_late_impression(spark, impl):
     ]
 
 
-def test_custom_window_click_then_impression_before_expiry_merges(spark, impl):
+@slow
+def test_custom_window_click_then_impression_before_expiry_merges(spark):
     """AdCtrCustomWindowCalculatorTest.scala:135-152 'Click and then late
     impression but in allowed lateness': the watermark never passes the
     click window end before the impression arrives, so the two windows
@@ -325,7 +296,7 @@ def test_custom_window_click_then_impression_before_expiry_merges(spark, impl):
         .add_elements_at("12:02:00", _ad_event("impression"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl, lateness=60)
+    out = _run_ad(spark, sc, lateness=60)
     got = [
         (r["window_end"].isoformat(), r["clicks"], r["impressions"], r["ctr"])
         for r in out
@@ -333,7 +304,8 @@ def test_custom_window_click_then_impression_before_expiry_merges(spark, impl):
     assert got == [("1970-01-01T12:02:00", 1, 1, 1.0)]
 
 
-def test_custom_window_separate_windows_after_expiry(spark, impl):
+@slow
+def test_custom_window_separate_windows_after_expiry(spark):
     """Two impressions with a watermark advance between them: the first
     window is already closed when the second arrives → two windows. (If
     the watermark had NOT advanced, Beam would merge them — mergeWindows
@@ -345,12 +317,13 @@ def test_custom_window_separate_windows_after_expiry(spark, impl):
         .add_elements_at("12:30:00", _ad_event("impression"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl)
+    out = _run_ad(spark, sc)
     starts = sorted(r["window_start"].isoformat() for r in out)
     assert starts == ["1970-01-01T12:00:00", "1970-01-01T12:30:00"]
 
 
-def test_custom_window_live_impressions_merge(spark, impl):
+@slow
+def test_custom_window_live_impressions_merge(spark):
     """Two impressions 30 min apart with NO watermark advance between:
     both windows are live → unconditional per-key merge into one window
     [12:00, 12:40) (end = max of impression ends)."""
@@ -360,7 +333,7 @@ def test_custom_window_live_impressions_merge(spark, impl):
         .add_elements_at("12:30:00", _ad_event("impression"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl)
+    out = _run_ad(spark, sc)
     assert len(out) == 1
     r = out[0]
     # two impressions, capped to 1 by the semigroup
@@ -369,7 +342,8 @@ def test_custom_window_live_impressions_merge(spark, impl):
     assert r["window_end"] == t("12:40:00").replace(tzinfo=None)
 
 
-def test_custom_window_duplicate_clicks_capped(spark, impl):
+@slow
+def test_custom_window_duplicate_clicks_capped(spark):
     """Capped semigroup (model.scala:88-98): duplicate clicks still CTR
     1.0 — all three events merge into ONE window (the watermark is held
     back, as in the reference's TestStream where it never advances before
@@ -381,12 +355,54 @@ def test_custom_window_duplicate_clicks_capped(spark, impl):
         .add_elements_at("12:01:30", _ad_event("click"))
         .advance_watermark_to_infinity()
     )
-    out = _run_ad(spark, sc, impl, delay=3600)
+    out = _run_ad(spark, sc, delay=3600)
     got = [
         (r["window_end"].isoformat(), r["clicks"], r["impressions"], r["ctr"])
         for r in out
     ]
     assert got == [("1970-01-01T12:01:30", 1, 1, 1.0)]
+
+
+def test_custom_window_unknown_rows_do_not_hold_the_window(spark):
+    """AdEventWindowFn assigns 'unknown' events no window. In the batch
+    where the watermark passes the impression window's end, the key
+    receives only 'unknown' rows: the on-time pane still fires in that
+    batch, and a later impression opens a second window (two panes, not
+    one merged pane). No-data micro-batches are off so the watermark
+    crossing lands in the batch that carries the 'unknown' row, as it
+    does when data keeps arriving."""
+    from example_beam_spark import schemas
+
+    sc = (
+        StreamScenario()
+        .add_elements_at("12:00:00", _ad_event("impression"))  # batch 0
+        .add_elements_at("12:15:00", _ad_event("unknown"))  # wm -> 12:15
+        .add_elements_at("12:15:30", _ad_event("unknown"))  # batch 2
+        .add_elements_at("12:20:00", _ad_event("impression"))
+        .advance_watermark_to_infinity()
+    )
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        captured = replay(
+            spark, sc, schemas.AD_EVENT, _custom_query, 0, output_mode="append"
+        )
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    got = [
+        (bid, r["window_start"].isoformat(), r["window_end"].isoformat(),
+         r["clicks"], r["impressions"])
+        for bid, rows in captured
+        for r in rows
+    ]
+    assert got[0] == (2, "1970-01-01T12:00:00", "1970-01-01T12:10:00", 0, 1)
+    assert [g[1:] for g in got[1:]] == [
+        ("1970-01-01T12:20:00", "1970-01-01T12:30:00", 0, 1)
+    ]
 
 
 # --------------------------------------------------------------------------
@@ -438,6 +454,7 @@ def _scr(name: str, key: str = "s1") -> dict:
     return {"key": key, "kind": KIND_DIM, "payload": name}
 
 
+@slow
 def test_join_ad_within_screen_ttl_matches(spark):
     """RepeaterEnricherTest 'enriched': ad shortly after the screen joins;
     a second ad much later but still inside the TTL ALSO joins — the exact
@@ -455,6 +472,7 @@ def test_join_ad_within_screen_ttl_matches(spark):
     assert got == {("ad1", "screenA"), ("ad2", "screenA")}
 
 
+@slow
 def test_join_ad_beyond_ttl_goes_to_dlq(spark):
     """RepeaterEnricherTest 'expired': an ad after the screen's TTL gets
     the outer-null (DLQ) row once the watermark passes."""
@@ -470,6 +488,7 @@ def test_join_ad_beyond_ttl_goes_to_dlq(spark):
     assert by_ad == {"adLate": None}
 
 
+@slow
 def test_join_ad_before_screen_goes_to_dlq(spark):
     """RepeaterEnricherTest 'not enriched': an ad with no prior screen
     (the screen arrives after the ad's event time) is unmatched — the
@@ -486,6 +505,7 @@ def test_join_ad_before_screen_goes_to_dlq(spark):
     assert by_ad == {"adEarly": None}
 
 
+@slow
 def test_join_multiple_screens_all_match(spark):
     """Two screen versions inside the TTL both join (the join is 1:N,
     unlike the lookup cache's latest-wins)."""
@@ -502,6 +522,7 @@ def test_join_multiple_screens_all_match(spark):
     assert got == {("ad1", "v1"), ("ad1", "v2")}
 
 
+@slow
 def test_join_salted_hot_key_same_semantics(spark):
     """Skew salting (the mitigation the join module header documents):
     a hot key's facts are spread across (key, salt) state partitions while
@@ -559,33 +580,3 @@ def test_join_salted_hot_key_same_semantics(spark):
         ("ad4", "screenA"),
         ("adLate", None),
     ]
-
-
-def test_tws_gate_opens_the_moment_protobuf_exists(monkeypatch):
-    """The 14 tws skips are a PROBE, not a hardcode: the moment
-    `import google.protobuf` succeeds in this environment, the gate
-    reports available and every parametrized tws test un-skips on the
-    next run. Proven by planting a minimal fake of the package. Also
-    pins that the real current probe result matches what the runtime
-    actually has (so the skip reason can never go stale)."""
-    import importlib
-    import sys
-    import types
-
-    from example_beam_spark.streaming.tws import tws_unavailable_reason
-
-    # the probe must agree with reality right now
-    try:
-        importlib.import_module("google.protobuf")
-        really_available = True
-    except ImportError:
-        really_available = False
-    assert (tws_unavailable_reason() is None) == really_available
-
-    # and it must flip to available as soon as the import succeeds
-    google = types.ModuleType("google")
-    protobuf = types.ModuleType("google.protobuf")
-    google.protobuf = protobuf
-    monkeypatch.setitem(sys.modules, "google", google)
-    monkeypatch.setitem(sys.modules, "google.protobuf", protobuf)
-    assert tws_unavailable_reason() is None

@@ -163,3 +163,32 @@ def test_flushed_reader_out_of_order_layout_still_flushes(spark, tmp_path, sf_di
     o_cols, o_rows = run_oracle(reg["sessionize_events_stream"].oracle, sf_dir)
     want = _canon(o_cols, o_rows)
     assert got == want
+
+
+def test_collapsed_schedule_without_no_data_batches_raises(spark, tmp_path):
+    """A single staged file collapses members and sentinels into one
+    batch, whose final flush needs the post-watermark no-data micro-batch:
+    with those batches disabled the reader raises (a check that survives
+    ``python -O``) instead of stranding state."""
+    import pytest
+
+    from example_beam_spark.streaming.entries import (
+        _restore_session,
+        read_events_stream_flushed,
+    )
+
+    d = tmp_path / "corpus"
+    d.mkdir()
+    _write_events_file(d / "events.parquet", EARLY)
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(RuntimeError, match="noDataMicroBatches"):
+            read_events_stream_flushed(spark, str(d))
+    finally:
+        _restore_session(spark)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
