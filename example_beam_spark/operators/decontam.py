@@ -785,30 +785,19 @@ def dedup_longest_shared_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DOC_STREAM_STAGE: dict[tuple, str] = {}
 _DOC_BASE_TS = 1_704_067_200  # fixture epoch family
-_DOC_SENTINEL_TS = 4102444800  # 2100-01-01
 
 
 def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage documents as a time-ordered arrival stream (ts = BASE +
-    doc_id seconds) with two far-future sentinel files driving the
-    final watermark flush (the read_events_stream_flushed discipline);
-    cache keyed by source fingerprint."""
-    import os
-    import tempfile
-    import time
-
+    doc_id seconds) with the two far-future sentinel files driving the
+    final watermark flush (streaming/entries.py:stage_sentinels — one
+    member, so the collapsed one-batch schedule); cache keyed by source
+    fingerprint."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from example_beam_spark.sources.parquet import parquet_members, table_path
-    from example_beam_spark.streaming.entries import (
-        _prepare_stream_session,
-        require_no_data_batches,
-    )
+    from example_beam_spark.streaming.entries import _temp_dir, stage_sentinels
 
-    _prepare_stream_session(
-        spark, min(8, spark.sparkContext.defaultParallelism)
-    )
     fp = tuple(
         sorted(
             (os.path.basename(m), os.stat(m).st_mtime_ns, os.stat(m).st_size)
@@ -818,7 +807,7 @@ def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (os.path.abspath(sf_dir), fp)
     d = _DOC_STREAM_STAGE.get(key)
     if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="stream_src_documents_")
+        d = _temp_dir("stream_src_documents_")
         staged = (
             load_table(spark, sf_dir, "documents")
             .select(
@@ -833,35 +822,23 @@ def _docs_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
         part_dir = os.path.join(d, "_stage")
         staged.coalesce(1).sortWithinPartitions("ts_us").write.parquet(part_dir)
         member = [p for p in os.listdir(part_dir) if p.endswith(".parquet")][0]
-        member_path = os.path.join(d, "docs-0000.parquet")
-        os.rename(os.path.join(part_dir, member), member_path)
-        base_ns = max(os.stat(member_path).st_mtime_ns, time.time_ns())
-        for i in range(2):
-            sentinel = os.path.join(d, f"zz_sentinel_{i}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "doc_id": pa.array([-1], pa.int64()),
-                        "text": pa.array([""], pa.string()),
-                        "ts_us": pa.array(
-                            [(_DOC_SENTINEL_TS + i) * 1_000_000], pa.int64()
-                        ),
-                    }
-                ),
-                sentinel,
-            )
-            mt = base_ns + (i + 1) * 2_000_000_000
-            os.utime(sentinel, ns=(mt, mt))
+        os.rename(
+            os.path.join(part_dir, member), os.path.join(d, "docs-0000.parquet")
+        )
         _DOC_STREAM_STAGE[key] = d
-    # Collapsed schedule (r15, the read_events_stream_flushed discipline):
-    # member + both sentinels in ONE batch — the doc rows are processed
-    # with the watermark still unset, and the final flush runs in the
-    # post-watermark no-data micro-batch, cutting two ~1-2 s machinery
-    # batches per drain. Requires noDataMicroBatches (default true).
-    require_no_data_batches(spark)
+
+    def sentinel(i: int, sec: int) -> pa.Table:
+        return pa.table(
+            {
+                "doc_id": pa.array([-1], pa.int64()),
+                "text": pa.array([""], pa.string()),
+                "ts_us": pa.array([sec * 1_000_000], pa.int64()),
+            }
+        )
+
     return (
         spark.readStream.schema("doc_id long, text string, ts_us long")
-        .option("maxFilesPerTrigger", 3)
+        .option("maxFilesPerTrigger", stage_sentinels(spark, d, sentinel))
         .parquet(d)
     )
 

@@ -793,13 +793,9 @@ def _ivfpq_streamed_index(spark: SparkSession, sf_dir: str) -> tuple:
     ingested through an availableNow stream (section comment)."""
     import glob
     import os
-    import tempfile
 
     from example_beam_spark.operators.structures import _layout_key, pq_encode_frame
-    from example_beam_spark.streaming.entries import (
-        _prepare_stream_session,
-        _restore_session,
-    )
+    from example_beam_spark.streaming.entries import _temp_dir, drain
 
     key = _layout_key(spark, sf_dir, "embeddings")
     hit = _STREAM_INDEX.get(key)
@@ -812,7 +808,7 @@ def _ivfpq_streamed_index(spark: SparkSession, sf_dir: str) -> tuple:
     base, delta = _append_split(emb)
     C, books, _n_base = _append_frozen_quantizers(spark, sf_dir)
 
-    base_dir = tempfile.mkdtemp(prefix="ebs_ivfpq_sbase_")
+    base_dir = _temp_dir("ebs_ivfpq_sbase_")
     (
         pq_encode_frame(base, C, books)
         .repartition(F.col("cell"))
@@ -823,14 +819,10 @@ def _ivfpq_streamed_index(spark: SparkSession, sf_dir: str) -> tuple:
 
     # stage the arriving vectors as >= 3 files so maxFilesPerTrigger=1
     # drives a genuine multi-micro-batch ingestion
-    stage_dir = tempfile.mkdtemp(prefix="ebs_ivfpq_sstage_")
+    stage_dir = _temp_dir("ebs_ivfpq_sstage_")
     delta.repartition(3).write.mode("overwrite").parquet(stage_dir)
 
-    out_dir = tempfile.mkdtemp(prefix="ebs_ivfpq_sbatches_")
-    ckpt = tempfile.mkdtemp(prefix="ebs_ivfpq_sckpt_")
-    _prepare_stream_session(spark, min(8, spark.sparkContext.defaultParallelism))
-
-    def sink(bdf: DataFrame, bid: int) -> None:
+    def write_batch(bdf: DataFrame, path: str) -> None:
         # an empty micro-batch (possible when the delta has fewer rows
         # than the 3-way staging repartition) must not write a dir: a
         # _SUCCESS-only dir still globs into roots and breaks schema
@@ -842,26 +834,15 @@ def _ivfpq_streamed_index(spark: SparkSession, sf_dir: str) -> tuple:
             bdf.repartition(F.col("cell"))
             .write.mode("overwrite")
             .partitionBy("cell")
-            .parquet(os.path.join(out_dir, f"batch-{bid:09d}"))
+            .parquet(path)
         )
 
-    try:
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        q = (
-            pq_encode_frame(stream, C, books)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        _restore_session(spark)
+    stream = (
+        spark.readStream.schema("vec_id long, embedding array<float>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
+    )
+    out_dir = drain(pq_encode_frame(stream, C, books), spark, write_batch)
 
     roots = [base_dir] + sorted(
         glob.glob(os.path.join(glob.escape(out_dir), "batch-*"))

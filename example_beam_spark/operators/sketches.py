@@ -336,12 +336,7 @@ def hll_distinct_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     no distinct state to grow."""
     from example_beam_spark.streaming.entries import read_events_stream, run_to_final
 
-    # 64-bucket bounded-state agg: few store instances win (r14 A/B,
-    # tools/drain_sizing_ab.py: 1.8 s at 32 -> 1.2 s at 8)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     agg = ev.select(*_hll_projection(F.col("user_id"))).groupBy("bucket").agg(
         F.max("rho").alias("m_j")
     )
@@ -514,12 +509,7 @@ def value_quantile_histogram_stream(spark: SparkSession, sf_dir: str) -> DataFra
     the 64-row drained state."""
     from example_beam_spark.streaming.entries import read_events_stream, run_to_final
 
-    # 64-bin bounded-state agg: same store-machinery profile as the HLL
-    # stream (r14 A/B above)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     bin_col = F.least(
         F.lit(HIST_BINS - 1),
         F.greatest(

@@ -1178,35 +1178,25 @@ def _stream_partitioned_sink(spark: SparkSession, sf_dir: str) -> str:
         )
         _STREAM_SINK_DIRS[key] = hit
     out, ckpt = hit
-    # read_events_stream sizes the session for a drain
-    # (_prepare_stream_session); the drain helpers restore it in their
-    # finally — this entry drains directly, so it must restore too or
-    # the override leaks into later batch queries in the same session
-    from example_beam_spark.streaming.entries import _restore_session
-
-    try:
-        src = read_events_stream(spark, sf_dir).withColumn(
-            "event_date", F.col("ts").cast("date")
-        )
-        q = (
-            src.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .partitionBy("event_date")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination(timeout) returns False on timeout with the
-        # query still RUNNING — reading the sink then would see a
-        # partial drain (silent oracle mismatch). Fail loudly instead
-        # (round-11 advice #1).
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "events stream drain did not terminate within 300s"
-            )
-    finally:
-        _restore_session(spark)
+    # a stateless file sink: no state store, so none of the drain
+    # runner's conf applies — its commit log is the point of this entry
+    src = read_events_stream(spark, sf_dir).withColumn(
+        "event_date", F.col("ts").cast("date")
+    )
+    q = (
+        src.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("event_date")
+        .trigger(availableNow=True)
+        .start()
+    )
+    # awaitTermination(timeout) returns False on timeout with the query
+    # still RUNNING — reading the sink then would see a partial drain
+    # (silent oracle mismatch). Fail loudly instead (round-11 advice #1).
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("events stream drain did not terminate within 300s")
     return out
 
 

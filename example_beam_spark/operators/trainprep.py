@@ -408,13 +408,8 @@ def cms_token_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         CMS_D,
         cms_col_of,
     )
-    from example_beam_spark.streaming.entries import (
-        _prepare_stream_session,
-        _stage_dir,
-        run_to_final,
-    )
+    from example_beam_spark.streaming.entries import _stage_dir, run_to_final
 
-    _prepare_stream_session(spark, min(8, spark.sparkContext.defaultParallelism))
     d = _stage_dir(sf_dir, "documents")
     stream = spark.readStream.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -577,12 +572,7 @@ def events_topk_types_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_final,
     )
 
-    # windowed count into few groups: store machinery dominates (r14
-    # drain-sizing A/B class — tools/drain_sizing_ab.py)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withWatermark("ts", "1 hour")
+    ev = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     agg = (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count("*").cast("long").alias("n_events"))
@@ -656,12 +646,7 @@ def kmv_distinct_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_append,
     )
 
-    # bounded per-bucket state (k smallest hashes): few instances win
-    # (r14 drain-sizing A/B class — tools/drain_sizing_ab.py)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     keyed = ev.select(
         _h60_spark(F.col("user_id").cast("string")).alias("h")
     ).withColumn("bucket", F.pmod("h", F.lit(_KMV_BUCKETS)))

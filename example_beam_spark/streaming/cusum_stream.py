@@ -163,12 +163,9 @@ def events_cusum_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("mu") + 0.5 * F.col("sigma")).alias("c"),
         (5.0 * F.col("sigma")).alias("h"),
     )
-    # O(1)-state kernel per type: store machinery dominates (r14 A/B,
-    # tools/drain_sizing_ab.py: 2.7 s at 32 -> 2.3 s at 8)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).select("event_type", "ts", "event_id", "value")
+    ev = read_events_stream(spark, sf_dir).select(
+        "event_type", "ts", "event_id", "value"
+    )
     keyed = ev.join(F.broadcast(calib), "event_type")
     per_type = run_to_final(cusum_stream(keyed), ["event_type"], spark)
     return per_type.select("event_type", "n_rows", "n_alarms", "max_cusum")

@@ -3,13 +3,13 @@ the corpus parquet and return their final results as a batch DataFrame —
 so the driver's DuckDB oracle can gate streaming execution too.
 
 Pattern: readStream(parquet) → withWatermark → windowed aggregation →
-``foreachBatch`` sink appending update-mode batches (tagged with batch id)
-to a parquet staging dir → availableNow trigger drains the source → read
-staging back and keep each key's LAST update (update mode re-emits the
-accumulated aggregate, so the last row per key IS the final state — this
-is exactly the reference's ACCUMULATING_FIRED_PANES final pane). The
-result is provably equal to the batch query, hence the SAME oracle SQL
-as the batch variant.
+:func:`drain` (the one availableNow runner: a ``foreachBatch`` sink
+writes each update-mode batch, tagged with its batch id, into its own
+staging dir) → read staging back and keep each key's LAST update
+(update mode re-emits the accumulated aggregate, so the last row per key
+IS the final state — this is exactly the reference's
+ACCUMULATING_FIRED_PANES final pane). The result is provably equal to
+the batch query, hence the SAME oracle SQL as the batch variant.
 
 Scale notes: the staging-parquet + last-update-wins pattern is the
 standard exactly-once upsert sink shape (foreachBatch → MERGE in real
@@ -18,6 +18,8 @@ deployments); nothing is collected on the driver.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import glob
 import os
 import shutil
@@ -33,12 +35,24 @@ from example_beam_spark.sources.parquet import (
     apply_ns_shim,
     events_read_schema,
     parquet_members,
+    parquet_rowcount,
     table_path,
 )
 from example_beam_spark.streaming.ctr_stream import (
     ctr_fixed_window_stream,
     ctr_sliding_window_stream,
 )
+
+
+def _temp_dir(prefix: str) -> str:
+    """``mkdtemp`` whose removal is registered with ``atexit``. Staged
+    sources and drain outputs back the DataFrames the entries return,
+    which re-read them lazily on every action — a caller may build
+    several entries before consuming any — so the dirs live until the
+    process ends, and no longer."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
 
 
 def _stage_dir(sf_dir: str, name: str, variant: str = "") -> str:
@@ -52,7 +66,7 @@ def _stage_dir(sf_dir: str, name: str, variant: str = "") -> str:
     key = (os.path.abspath(sf_dir), name + variant)
     d = _STAGE_CACHE.get(key)
     if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix=f"stream_src_{name}_")
+        d = _temp_dir(f"stream_src_{name}_")
         for member in parquet_members(table_path(sf_dir, name)):
             os.symlink(member, os.path.join(d, os.path.basename(member)))
         _STAGE_CACHE[key] = d
@@ -115,87 +129,7 @@ def _staged_files_time_ordered(d: str) -> bool:
     return True
 
 
-def _prepare_stream_session(
-    spark: SparkSession, shuffle_partitions: int | None = None
-) -> None:
-    """Session prep shared by every streaming entry. Besides UTC, size
-    ``spark.sql.shuffle.partitions`` — which fixes the state-store
-    partition count at checkpoint creation — to the available cores: the
-    vanilla 200 multiplies per-micro-batch state-store and Python-worker
-    overhead ~25× on this bounded corpus drain (measured 47 s → 11 s on
-    the lookup-cache join under a default session). At production scale
-    the same knob is sized to state volume, not cores; each entry creates
-    a fresh checkpoint so the setting binds per run.
-
-    The pre-existing value is saved once (module global) and restored by
-    the drain helpers' ``finally`` (:func:`_restore_session`), so batch
-    queries running later in the same session keep their own partition
-    count."""
-    global _SAVED_SHUFFLE, _SAVED_PROVIDER
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if _SAVED_SHUFFLE is None:
-        _SAVED_SHUFFLE = spark.conf.get("spark.sql.shuffle.partitions")
-    # Partition sizing per the tools/drain_tuning.py matrix: state-store
-    # instances (and their per-micro-batch open/commit) scale with this
-    # count. Since r14 every drain passes few instances explicitly
-    # (min(8, cores) for bounded-state drains, cardinality-derived for
-    # the unbounded-key ones — see keyed_drain_instances): store
-    # machinery, not CPU, dominates at corpus scale even for the
-    # Python-stateful kernels. The one exception was the heavy custom
-    # window kernel, which wanted all cores until the r15 bucketed
-    # rewrite collapsed its dispatch count; it now defaults here
-    # (shuffle_partitions=None → cores) with the bucket fan-out
-    # providing the parallelism. EBS_STREAM_SHUFFLE overrides for lane
-    # sweeps; production sizes to state volume, not cores.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "EBS_STREAM_SHUFFLE",
-            str(shuffle_partitions or spark.sparkContext.defaultParallelism),
-        ),
-    )
-    # RocksDB state store: state lives off-heap/on-disk, so executor state
-    # volume is bounded by disk, not memory — the provider production runs
-    # at large state. Binds at checkpoint creation (each entry makes a
-    # fresh checkpoint); measured at-least-as-fast as the in-memory
-    # default on the bounded corpus drains. Saved/restored like the
-    # shuffle knob so it never leaks into the consumer's own queries.
-    if _SAVED_PROVIDER is _UNSET:
-        try:
-            _SAVED_PROVIDER = spark.conf.get(_PROVIDER_KEY)
-        except Exception:
-            _SAVED_PROVIDER = None
-    # EBS_STATE_PROVIDER=hdfs pins the in-memory HDFS-backed default
-    # instead — the kill/resume suite runs the corpus entries under BOTH
-    # providers (the provider binds at checkpoint creation, so recovery
-    # must be proven per provider).
-    if os.environ.get("EBS_STATE_PROVIDER") == "hdfs":
-        spark.conf.set(_PROVIDER_KEY, _HDFS_PROVIDER)
-    else:
-        spark.conf.set(_PROVIDER_KEY, ROCKSDB_PROVIDER)
-        # Changelog checkpointing: commit a per-batch changelog instead
-        # of uploading full RocksDB SST snapshots every micro-batch
-        # (snapshots continue in the background) — the documented
-        # low-commit-latency mode for RocksDB state stores, and the
-        # right production setting when state mutates a small fraction
-        # per batch. The r14 drain decomposition measured the plain
-        # snapshot-per-commit path 1.5-4 s slower per bounded drain at
-        # 8 store instances (tools/repeat_probe.py). Binds at checkpoint
-        # creation like the provider itself; EBS_ROCKSDB_CHANGELOG=0
-        # restores the snapshot path for lane sweeps.
-        global _SAVED_CHANGELOG
-        if _SAVED_CHANGELOG is _UNSET:
-            try:
-                _SAVED_CHANGELOG = spark.conf.get(_CHANGELOG_KEY)
-            except Exception:
-                _SAVED_CHANGELOG = None
-        _chg = os.environ.get("EBS_ROCKSDB_CHANGELOG", "true").lower()
-        spark.conf.set(
-            _CHANGELOG_KEY,
-            "false" if _chg in ("0", "false", "no") else "true",
-        )
-
-
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 _HDFS_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -207,40 +141,11 @@ ROCKSDB_PROVIDER = (
 _CHANGELOG_KEY = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
-_UNSET = object()
-_SAVED_SHUFFLE: str | None = None
-_SAVED_PROVIDER: object = _UNSET
-_SAVED_CHANGELOG: object = _UNSET
-
-
-def _restore_session(spark: SparkSession) -> None:
-    """Restore ``spark.sql.shuffle.partitions`` and the state store
-    provider to their pre-streaming values (paired with
-    :func:`_prepare_stream_session`; called from the drain helpers'
-    ``finally`` so the overrides never leak into later batch work in the
-    same session)."""
-    global _SAVED_SHUFFLE, _SAVED_PROVIDER, _SAVED_CHANGELOG
-    if _SAVED_SHUFFLE is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", _SAVED_SHUFFLE)
-        _SAVED_SHUFFLE = None
-    if _SAVED_PROVIDER is not _UNSET:
-        if _SAVED_PROVIDER is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, _SAVED_PROVIDER)
-        _SAVED_PROVIDER = _UNSET
-    if _SAVED_CHANGELOG is not _UNSET:
-        if _SAVED_CHANGELOG is None:
-            spark.conf.unset(_CHANGELOG_KEY)
-        else:
-            spark.conf.set(_CHANGELOG_KEY, _SAVED_CHANGELOG)
-        _SAVED_CHANGELOG = _UNSET
 
 
 # Per-micro-batch StreamingQueryProgress dicts of the LAST drained query
-# (run_to_final / run_to_append overwrite it per drain). The state-size
-# lane (tools/multibatch.py) and tests/test_state_metrics.py read the
-# `stateOperators` entries (numRowsTotal / numRowsUpdated /
+# (every drain overwrites it). The state-size lane (tools/multibatch.py)
+# reads the `stateOperators` entries (numRowsTotal / numRowsUpdated /
 # numRowsRemoved / numRowsDroppedByWatermark) to turn the bounded-state
 # design claims into per-batch MEASUREMENTS — eviction observed, not
 # argued. Negligible cost: availableNow drains keep <100 progress
@@ -248,23 +153,17 @@ def _restore_session(spark: SparkSession) -> None:
 LAST_PROGRESS: list[dict] = []
 
 # Test-harness knobs for the kill/resume suite
-# (tests/test_multibatch_resume.py): when set, the drain helpers reuse
-# the given sink/checkpoint dirs across entry invocations (so a second
-# call RESUMES the availableNow drain from the checkpoint instead of
-# starting fresh) and inject a failure — the foreachBatch sink raises
-# BEFORE writing when its batch id reaches ``fail_at_batch``, the
-# mid-flight crash Structured Streaming's restart contract must absorb.
-# Empty in every production / registered-query path.
+# (tests/test_multibatch_resume.py): ``out_dir``/``ckpt`` make every
+# drain reuse the given sink/checkpoint dirs across entry invocations
+# (so a second call RESUMES the availableNow drain from the checkpoint
+# instead of starting fresh); ``fail_at_batch`` makes the foreachBatch
+# sink raise BEFORE writing when its batch id reaches it — the
+# mid-flight crash Structured Streaming's restart contract must absorb;
+# ``provider="hdfs"`` pins the in-memory HDFS-backed state store instead
+# of RocksDB (the provider binds at checkpoint creation, so recovery is
+# proven per provider). Empty in every production / registered-query
+# path.
 DRAIN_OVERRIDES: dict = {}
-
-
-def _drain_dirs(kind: str) -> tuple[str, str, bool]:
-    out_dir = DRAIN_OVERRIDES.get("out_dir") or tempfile.mkdtemp(
-        prefix=f"stream_{kind}_"
-    )
-    keep_ckpt = "ckpt" in DRAIN_OVERRIDES
-    ckpt = DRAIN_OVERRIDES.get("ckpt") or tempfile.mkdtemp(prefix="stream_ckpt_")
-    return out_dir, ckpt, keep_ckpt
 
 
 def _maybe_fail(bid: int) -> None:
@@ -308,10 +207,132 @@ def state_rows_series(progress: list[dict] | None = None) -> list[dict]:
     return out
 
 
-# Distinct-key estimates per (sf_dir, column, source fingerprint) — one
-# approx_count_distinct job per session per corpus layout, shared by all
-# unbounded-key drains (invalidated by any fixture regeneration).
-_KEY_EST_CACHE: dict[tuple, int] = {}
+@contextlib.contextmanager
+def _drain_conf(spark: SparkSession, partitions: int):
+    """Scope the session conf a stateful drain binds at checkpoint
+    creation — shuffle partitions (the state-store instance count), the
+    state-store provider and RocksDB changelog checkpointing — to one
+    ``start()``…``awaitTermination()``. Prior values are held in locals
+    and put back (or unset) in ``finally``, so neither a failed drain nor
+    a later batch query in the same session sees the overrides.
+
+    RocksDB keeps state off-heap/on-disk, so executor state volume is
+    bounded by disk, not memory — the provider production runs at large
+    state; measured at-least-as-fast as the in-memory default on the
+    corpus drains. Changelog checkpointing commits a per-batch changelog
+    instead of uploading full SST snapshots every micro-batch (snapshots
+    continue in the background): the r14 drain decomposition measured
+    the snapshot-per-commit path 1.5-4 s slower per bounded drain at 8
+    store instances."""
+    hdfs = DRAIN_OVERRIDES.get("provider") == "hdfs"
+    overrides = {
+        _SHUFFLE_KEY: str(partitions),
+        _PROVIDER_KEY: _HDFS_PROVIDER if hdfs else ROCKSDB_PROVIDER,
+    }
+    if not hdfs:
+        overrides[_CHANGELOG_KEY] = "true"
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _write_overwrite(bdf: DataFrame, path: str) -> None:
+    bdf.write.mode("overwrite").parquet(path)
+
+
+def _batch_overwrite_sink(out_dir: str, write_batch=_write_overwrite):
+    """The drain's one foreachBatch delivery: batch ``<id>`` goes to its
+    own ``out_dir/batch-<id:09d>`` dir, which ``write_batch`` writes in
+    mode="overwrite". Redelivery of the same batch id (Spark's
+    at-least-once contract after a mid-batch failure) therefore replaces
+    that batch's output — including any partial files a killed first
+    attempt left — instead of appending a duplicate copy: exactly-once
+    output per batch id (pinned by tests/test_streaming.py::
+    test_run_to_append_idempotent_under_batch_replay)."""
+
+    def sink(bdf: DataFrame, bid: int) -> None:
+        _maybe_fail(bid)
+        write_batch(bdf, os.path.join(out_dir, f"batch-{bid:09d}"))
+
+    return sink
+
+
+def drain(
+    df: DataFrame,
+    spark: SparkSession,
+    write_batch,
+    *,
+    mode: str = "append",
+    partitions: int | None = None,
+) -> str:
+    """Run the streaming DataFrame ``df`` to completion as ONE
+    availableNow query and return the dir holding its output, one
+    ``batch-<id>`` dir per micro-batch written by
+    ``write_batch(bdf, path)`` (see :func:`_batch_overwrite_sink`).
+
+    The runner owns every drain chore: the out dir
+    (``DRAIN_OVERRIDES["out_dir"]``, else a fresh temp dir removed at
+    exit), the checkpoint (removed after a clean drain unless
+    ``DRAIN_OVERRIDES["ckpt"]`` supplies it), failure injection, the
+    scoped session conf (:func:`_drain_conf`) and progress capture into
+    :data:`LAST_PROGRESS`.
+
+    Sizing — ``partitions`` is spark.sql.shuffle.partitions for this
+    drain, which fixes a stateful query's state-store instance count at
+    checkpoint creation; each instance pays an open/commit per
+    micro-batch. ``None`` means min(8, cores): on the bounded corpus
+    drains store machinery, not CPU, is the cost, so few instances win.
+    The r10/r14 interleaved A/Bs at 32 cores, 32 → 8 instances with
+    identical rows: fixed CTR 2.9 → 1.65 s, dedup 2.35 → 1.56 s, drift
+    1.61 → 1.16 s, HLL 1.8 → 1.2 s, cusum 2.7 → 2.3 s, funnel 1.94 →
+    1.76 s, markov 2.9 → 2.6 s, lookup cache 9.4/13.5 → 7.2/8.8 s,
+    repeat 6.4 → 5.7 s, session window 5.0 → 2.5 s, stream-stream join
+    12.9 → 4.6 s; a vanilla session's 200 took the lookup-cache join to
+    47 s against 11 s at cores. Two kinds of drain size otherwise:
+    the bucketed custom window passes all cores (its bucket fan-out is
+    its parallelism), and the unbounded per-user drains (lookup cache,
+    funnel, markov) pass :func:`keyed_drain_instances`, which grows with
+    the table at production volume. Production sizes to state volume,
+    not cores; each drain makes a fresh checkpoint, so the setting binds
+    per run."""
+    out_dir = DRAIN_OVERRIDES.get("out_dir") or _temp_dir("stream_out_")
+    keep_ckpt = "ckpt" in DRAIN_OVERRIDES
+    ckpt = DRAIN_OVERRIDES.get("ckpt") or _temp_dir("stream_ckpt_")
+    if partitions is None:
+        partitions = min(8, spark.sparkContext.defaultParallelism)
+    with _drain_conf(spark, partitions):
+        q = (
+            df.writeStream.outputMode(mode)
+            .foreachBatch(_batch_overwrite_sink(out_dir, write_batch))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    _capture_progress(q)
+    if not keep_ckpt:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return out_dir
+
+
+def read_batches(
+    spark: SparkSession, out_dir: str, schema, pattern: str = "batch-*"
+) -> DataFrame:
+    """Everything a drain wrote under ``out_dir`` (the dirs matching
+    ``pattern``); an empty frame of ``schema`` if no batch wrote any."""
+    dirs = sorted(glob.glob(os.path.join(glob.escape(out_dir), pattern)))
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(*dirs)
+
 
 # Target per-instance state cardinality for unbounded-key drains: a
 # RocksDB store instance comfortably holds a few hundred thousand hot
@@ -320,53 +341,27 @@ _KEY_EST_CACHE: dict[tuple, int] = {}
 _KEYS_PER_INSTANCE = 250_000
 
 
-def keyed_drain_instances(
-    spark: SparkSession, sf_dir: str, key_col: str = "user_id"
-) -> int:
+def keyed_drain_instances(spark: SparkSession, sf_dir: str) -> int:
     """State-store instance count for UNBOUNDED-key drains (per-user
-    lookup cache / funnel / markov state), derived from the estimated
-    distinct-key cardinality instead of a constant (guide §2.4; r14
-    verdict #4): max(min(8, cores), ceil(keys / 250k)). At corpus scale
-    the measured 8-instance floor dominates (identical sf0.1 numbers);
-    at production key volumes the count grows with state so neither
-    per-instance memory nor state parallelism is capped by a local-mode
-    constant. EBS_STREAM_SHUFFLE still overrides downstream (the
-    estimate feeds shuffle_partitions via _prepare_stream_session,
-    whose env override wins). The estimate is one approx_count_distinct
-    job, cached per (sf_dir, column, source fingerprint)."""
-    from example_beam_spark.sources import load_table
-
-    members = parquet_members(table_path(sf_dir, "events"))
-    fp = tuple(
-        sorted(
-            (os.path.basename(m), os.stat(m).st_mtime_ns, os.stat(m).st_size)
-            for m in members
-        )
-    )
-    key = (os.path.abspath(sf_dir), key_col, fp)
-    est = _KEY_EST_CACHE.get(key)
-    if est is None:
-        from pyspark.sql import functions as _F
-
-        est = (
-            load_table(spark, sf_dir, "events")
-            .agg(_F.approx_count_distinct(key_col))
-            .collect()[0][0]
-        )
-        _KEY_EST_CACHE[key] = est
+    lookup cache / funnel / markov state), derived from the table size
+    instead of a constant: max(min(8, cores), ceil(rows / 250k)). The
+    events row count bounds the distinct keys from above and comes from
+    the parquet footers — no Spark job, no data read. At corpus scale
+    the 8-instance floor dominates; at production volume the count grows
+    with the table (an over-estimate when users repeat many times, the
+    safe side for per-instance memory)."""
     floor = min(8, spark.sparkContext.defaultParallelism)
-    return max(floor, -(-est // _KEYS_PER_INSTANCE))
+    rows = parquet_rowcount(sf_dir, "events")
+    return max(floor, -(-rows // _KEYS_PER_INSTANCE))
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = None
-) -> DataFrame:
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of the events table — the footer-negotiated encoding
     branch (ns shim vs native TimestampType) is picked BEFORE building the
-    readStream schema, so batch and streaming reads cannot drift.
-    ``shuffle_partitions`` sizes the state-store instance count for this
-    drain (see _prepare_stream_session)."""
-    _prepare_stream_session(spark, shuffle_partitions)
+    readStream schema, so batch and streaming reads cannot drift. Pins
+    the session to UTC like :func:`load_table` (event-time semantics are
+    UTC everywhere in the engine); drain sizing is :func:`drain`'s."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema, shim = events_read_schema(spark, sf_dir)
     d = _stage_dir(sf_dir, "events")
     reader = spark.readStream.schema(schema)
@@ -387,40 +382,27 @@ def read_events_stream(
 
 
 def run_to_final(
-    agg: DataFrame, key_cols: list[str], spark: SparkSession
+    agg: DataFrame,
+    key_cols: list[str],
+    spark: SparkSession,
+    partitions: int | None = None,
 ) -> DataFrame:
-    """Drain a streaming aggregation with availableNow + update-mode
-    foreachBatch into staging parquet; return last-update-per-key."""
-    out_dir, ckpt, keep_ckpt = _drain_dirs("out")
+    """Drain a streaming aggregation in update mode; return
+    last-update-per-key. Each row carries its batch dir's name, whose
+    zero-padded id orders the updates."""
 
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _maybe_fail(bid)
-        bdf.withColumn("_batch", F.lit(bid)).write.mode("append").parquet(out_dir)
+    def write(bdf: DataFrame, path: str) -> None:
+        tagged = bdf.withColumn("_batch", F.lit(os.path.basename(path)))
+        _write_overwrite(tagged, path)
 
-    try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        _restore_session(spark)
-    out = spark.read.parquet(out_dir)
+    out_dir = drain(agg, spark, write, mode="update", partitions=partitions)
+    out = read_batches(spark, out_dir, agg.schema.add("_batch", "string"))
     w = Window.partitionBy(*key_cols).orderBy(F.desc("_batch"))
-    final = (
+    return (
         out.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_batch")
     )
-    # staging dirs are left for the consumer's lifetime (tmp space); the
-    # returned DataFrame lazily re-reads them on every action.
-    if not keep_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return final
 
 
 @register("ctr_fixed_capped_stream", oracle=_ctr_oracle(3600, capped=True))
@@ -428,14 +410,7 @@ def ctr_fixed_capped_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship CTR query executed as a REAL streaming job (StateStore
     windowed aggregation, watermark, update mode) — final state equals the
     batch ctr_fixed_capped result, gated by the same oracle."""
-    # JVM windowed agg on a bounded drain: store machinery dominates, so
-    # few instances win (r14 interleaved A/B, tools/drain_sizing_ab.py:
-    # 2.9 s at 32 -> 1.65 s at 8; rows identical) — same conclusion as
-    # the r10 matrix for the stream-stream join and session window
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream(spark, sf_dir).withColumnRenamed("ts", "event_time")
     ev = ev.filter(F.col("event_type").isin("click", "view")).select(
         "user_id",
         "event_time",
@@ -455,11 +430,7 @@ def ctr_sliding_total_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration/period = 2 windows; StateStore keeps (key × open windows)
     rows, evicted by the watermark. Final state equals the batch
     ctr_sliding_total, gated by the same oracle."""
-    # same store-machinery profile as ctr_fixed_capped_stream (A/B above)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream(spark, sf_dir).withColumnRenamed("ts", "event_time")
     ev = ev.filter(F.col("event_type").isin("click", "view")).select(
         "user_id",
         "event_time",
@@ -493,12 +464,7 @@ def dedup_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     state at the watermark; that variant trades global exactness for
     bounded state, so the oracle-exact entry uses the global form.
     """
-    # dedup StateStore drain: few instances win (r14 A/B on the
-    # within-watermark sibling: 2.35 s at 32 -> 1.56 s at 8)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).select("user_id", "event_type")
+    ev = read_events_stream(spark, sf_dir).select("user_id", "event_type")
     distinct = ev.dropDuplicates(["user_id", "event_type"]).withColumn(
         "seen", F.lit(1).cast("long")
     )
@@ -536,11 +502,7 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     pinned by a replay test
     (tests/test_streaming.py::test_drop_duplicates_within_watermark_evicts_state).
     """
-    # r14 A/B (tools/drain_sizing_ab.py): 2.35 s at 32 -> 1.56 s at 8
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).select(
+    ev = read_events_stream(spark, sf_dir).select(
         "user_id",
         "event_type",
         F.date_trunc("hour", F.col("ts")).alias("hour_bucket"),
@@ -552,54 +514,16 @@ def dedup_stream_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     return run_to_append(dd, spark)
 
 
-def _batch_overwrite_sink(out_dir: str):
-    """foreachBatch delivery for :func:`run_to_append`: mode="overwrite"
-    into a per-batch subdir, so redelivery of the same batch id (Spark's
-    at-least-once contract after a mid-batch failure) replaces that
-    batch's output — including any partial files a killed first attempt
-    left — instead of appending a duplicate copy."""
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _maybe_fail(bid)
-        bdf.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch-{bid:09d}")
-        )
-
-    return sink
-
-
-def run_to_append(agg: DataFrame, spark: SparkSession) -> DataFrame:
-    """Drain an append-mode stateful streaming query (availableNow) into
-    staging parquet and return everything appended.
-
-    Idempotent under micro-batch replay (the same contract the Avro
-    streaming sink implements with batch-id file prefixes): each batch
-    writes mode="overwrite" into its own ``batch-<id>`` subdir, so a
-    batch re-delivered after a mid-batch failure REPLACES its own output
-    instead of appending a second copy — foreachBatch is at-least-once
-    per batch id; the sink must be idempotent per batch id to get
-    exactly-once (pinned by tests/test_streaming.py::
-    test_run_to_append_idempotent_under_batch_replay)."""
-    out_dir, ckpt, keep_ckpt = _drain_dirs("out")
-    sink = _batch_overwrite_sink(out_dir)
-    try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        _restore_session(spark)
-    if not keep_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    batch_dirs = sorted(glob.glob(os.path.join(glob.escape(out_dir), "batch-*")))
-    if not batch_dirs:
-        return spark.createDataFrame([], agg.schema)
-    return spark.read.parquet(*batch_dirs)
+def run_to_append(
+    agg: DataFrame, spark: SparkSession, partitions: int | None = None
+) -> DataFrame:
+    """Drain an append-mode stateful streaming query (availableNow) and
+    return everything appended — exactly once per batch id under
+    micro-batch replay (the drain's per-batch overwrite delivery, the
+    same contract the Avro streaming sink implements with batch-id file
+    prefixes)."""
+    out_dir = drain(agg, spark, _write_overwrite, partitions=partitions)
+    return read_batches(spark, out_dir, agg.schema)
 
 
 # Converged lookup-cache semantics over the corpus (see the query
@@ -679,15 +603,9 @@ def lookup_cache_join_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lookup_cache_join_stream,
     )
 
-    # moderate Python-stateful kernel: few store instances still win
-    # (r14 interleaved A/B, tools/drain_sizing_ab.py: 9.4/13.5 s at 32
-    # -> 7.2/8.8 s at 8; rows identical). UNBOUNDED per-user state, so
-    # the count derives from estimated key cardinality (r15 — the 8
-    # floor at corpus scale, growing with keys at production volume)
-    ev = read_events_stream_flushed(
-        spark, sf_dir,
-        shuffle_partitions=keyed_drain_instances(spark, sf_dir),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     ev = ev.withWatermark("event_time", "1 hour")
     # drop sentinels AFTER the watermark node (unsplittable CASE predicate)
     union = ev.filter(
@@ -703,7 +621,10 @@ def lookup_cache_join_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_time",
     )
     joined = lookup_cache_join_stream(union, ttl_seconds=24 * 3600)
-    return run_to_append(joined, spark)
+    # UNBOUNDED per-user state: sized by keyed_drain_instances (drain doc)
+    return run_to_append(
+        joined, spark, partitions=keyed_drain_instances(spark, sf_dir)
+    )
 
 
 # Converged custom-window semantics over the corpus (see the query
@@ -787,7 +708,10 @@ def ctr_custom_window_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_time",
     )
     out = ad_ctr_custom_window_stream(ads, 600, 60)
-    return run_to_append(out, spark)
+    # the bucket fan-out is this kernel's parallelism: all cores
+    return run_to_append(
+        out, spark, partitions=spark.sparkContext.defaultParallelism
+    )
 
 
 _SENTINEL_USER = -1
@@ -795,110 +719,111 @@ _SENTINEL_USER = -1
 _SENTINEL_TS_SECONDS = 4102444800
 
 
-def read_events_stream_flushed(
-    spark: SparkSession, sf_dir: str, shuffle_partitions: int | None = None
-) -> DataFrame:
-    """Like :func:`read_events_stream`, but the staging dir also carries a
-    far-future *sentinel* event (user_id = -1, ts = year 2100). Session
-    windows only support append output, which emits a session when the
-    watermark passes its end — without the sentinel, every session within
-    (watermark delay + gap) of the corpus max event time would be stranded
-    in the state store when availableNow drains. The sentinel drives the
-    watermark past everything; availableNow's multi-batch executor then
-    runs the extra flush batch. Callers must drop sentinel rows AFTER
-    withWatermark (unsplittable CASE predicate — see harness module doc)."""
-    _prepare_stream_session(spark, shuffle_partitions)
+def read_events_stream_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Like :func:`read_events_stream`, but the staging dir also carries
+    far-future *sentinel* events (user_id = -1, ts = year 2100; see
+    :func:`stage_sentinels`). Session windows only support append
+    output, which emits a session when the watermark passes its end —
+    without the sentinel, every session within (watermark delay + gap)
+    of the corpus max event time would be stranded in the state store
+    when availableNow drains. Callers must drop sentinel rows AFTER
+    withWatermark (unsplittable CASE predicate — see harness module
+    doc)."""
+    import pyarrow as pa
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema, shim = events_read_schema(spark, sf_dir)
     d = _stage_dir(sf_dir, "events", variant="+sentinel")
-    # TWO sentinel files at increasing times, read as separate micro-batches
-    # (maxFilesPerTrigger=1): a watermark update only takes effect at the
-    # NEXT batch, and stateful operators (outer joins especially) evict and
-    # emit one batch after that — the second sentinel guarantees the final
-    # eviction batch actually runs before availableNow terminates.
-    # Written with pyarrow as SINGLE parquet files: the streaming file
-    # source lists plain files only and would silently skip the directory
-    # that df.write.parquet() produces.
-    import pyarrow as pa
+
+    def sentinel(i: int, sec: int) -> pa.Table:
+        # Sentinel ts is written in the SAME physical encoding the corpus
+        # uses (raw int64 nanos under the ns shim, else a native
+        # timestamp column), so the staged dir stays schema-homogeneous
+        # under the chosen read schema.
+        if shim:
+            ts_arr = pa.array([sec * 1_000_000_000], pa.int64())
+        else:
+            ts_arr = pa.array([sec * 1_000_000], pa.timestamp("us"))
+        return pa.table(
+            {
+                "event_id": pa.array([-1 - i], pa.int64()),
+                "ts": ts_arr,
+                "user_id": pa.array([_SENTINEL_USER], pa.int64()),
+                "event_type": pa.array(["__sentinel__"], pa.string()),
+                "value": pa.array([0.0], pa.float64()),
+                "props": pa.array([None], pa.string()),
+            }
+        )
+
+    df = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", stage_sentinels(spark, d, sentinel))
+        .parquet(d)
+    )
+    return apply_ns_shim(df) if shim else df
+
+
+def stage_sentinels(spark: SparkSession, d: str, sentinel) -> int:
+    """Add the two far-future sentinel files to the staging dir ``d``
+    (once; ``sentinel(i, sec)`` builds file ``i``'s one-row table at
+    epoch second ``sec``) and return the ``maxFilesPerTrigger`` of the
+    drain schedule over ``d``.
+
+    TWO sentinels at increasing times: a watermark update only takes
+    effect at the NEXT batch, and stateful operators (outer joins
+    especially) evict and emit one batch after that — the second
+    sentinel guarantees the final eviction batch actually runs before
+    availableNow terminates. Each is a SINGLE parquet file written with
+    pyarrow: the streaming file source lists plain files only and would
+    silently skip the directory df.write.parquet() produces. Their
+    mtimes are forced strictly NEWER (in Hadoop's ms granularity) than
+    every member and than each other, so the file source always
+    schedules them LAST and in order, whatever the member mtimes look
+    like.
+
+    Micro-batch schedule (r15: collapsed where the split batches carry
+    no semantics — each extra availableNow batch costs ~1-2.5 s of pure
+    machinery at 8 store instances: incremental planning, per-partition
+    state-store open/commit, Python worker round trips, sink write;
+    measured per-batch in OPTIMIZATION_r15.md):
+
+    - MULTI-member, provably time-ordered staging (the multibatch
+      convergence lane): one file per trigger — the full multi-batch
+      schedule with the watermark advancing between data batches is the
+      point of that lane, and each sentinel must sit in its own batch.
+    - SINGLE-member staging (the standard fixture) or unprovable order:
+      ALL files — members AND sentinels — in ONE batch. The data is
+      processed with the watermark still unset (updates apply at batch
+      end), so no in-order row can be dropped as late and every
+      per-entry "whole corpus is one data batch" convergence argument
+      holds; the sentinels' only effect is the post-watermark jump past
+      year 2100. The final eviction/flush then happens in Spark's
+      post-watermark no-data micro-batch, so the drain is 2 micro-batches
+      instead of 4 — :func:`require_no_data_batches` makes a session
+      that disabled those batches fail loudly here, not with stranded
+      state."""
     import pyarrow.parquet as pq
 
+    members = [
+        f for f in os.listdir(d)
+        if not f.startswith(("zz_sentinel_", "_", "."))
+    ]
     member_max_mtime_ns = max(
-        (
-            os.stat(os.path.join(d, f)).st_mtime_ns
-            for f in os.listdir(d)
-            if not f.startswith("zz_sentinel_")
-        ),
-        default=0,
+        (os.stat(os.path.join(d, f)).st_mtime_ns for f in members), default=0
     )
     for i in (0, 1):
-        sentinel_file = os.path.join(d, f"zz_sentinel_{i}.parquet")
-        if not os.path.exists(sentinel_file):
-            # Sentinel ts is written in the SAME physical encoding the
-            # corpus uses (raw int64 nanos under the ns shim, else a
-            # native timestamp column), so the staged dir stays
-            # schema-homogeneous under the chosen read schema.
-            sec = _SENTINEL_TS_SECONDS + i
-            if shim:
-                ts_arr = pa.array([sec * 1_000_000_000], pa.int64())
-            else:
-                ts_arr = pa.array([sec * 1_000_000], pa.timestamp("us"))
-            table = pa.table(
-                {
-                    "event_id": pa.array([-1 - i], pa.int64()),
-                    "ts": ts_arr,
-                    "user_id": pa.array([_SENTINEL_USER], pa.int64()),
-                    "event_type": pa.array(["__sentinel__"], pa.string()),
-                    "value": pa.array([0.0], pa.float64()),
-                    "props": pa.array([None], pa.string()),
-                }
-            )
-            pq.write_table(table, sentinel_file)
-            # Force the sentinel files strictly NEWER (in Hadoop's ms
-            # granularity) than every member and than each other, so the
-            # file source always schedules them LAST and in order —
-            # whatever the member mtimes look like.
+        path = os.path.join(d, f"zz_sentinel_{i}.parquet")
+        if not os.path.exists(path):
+            pq.write_table(sentinel(i, _SENTINEL_TS_SECONDS + i), path)
             mt_ns = (
                 max(member_max_mtime_ns, time.time_ns())
                 + (i + 1) * 2_000_000_000
             )
-            os.utime(sentinel_file, ns=(mt_ns, mt_ns))
-    n_members = sum(
-        1 for f in os.listdir(d) if not f.startswith("zz_sentinel_")
-    )
-    # Micro-batch schedule (r15: collapsed where the split batches carry
-    # no semantics — each extra availableNow batch costs ~1-2.5 s of pure
-    # machinery at 8 store instances: incremental planning, per-partition
-    # state-store open/commit, Python worker round trips, sink write;
-    # measured per-batch in OPTIMIZATION_r15.md).
-    #
-    # - MULTI-member, provably time-ordered staging (the multibatch
-    #   convergence lane): one file per trigger — the full multi-batch
-    #   schedule with the watermark advancing between data batches is the
-    #   point of that lane, and each sentinel must sit in its own batch
-    #   (a watermark update takes effect one batch later).
-    # - SINGLE-member staging (the standard fixture) or unprovable order:
-    #   ALL files — members AND sentinels — in ONE batch. The data is
-    #   processed with the watermark still unset (updates apply at batch
-    #   end), so no in-order row can be dropped as late and every
-    #   per-entry "whole corpus is one data batch" convergence argument
-    #   holds unchanged; the sentinels' only effect is the post-batch
-    #   watermark jump past year 2100. The final eviction/flush then
-    #   happens in Spark's post-watermark no-data micro-batch
-    #   (noDataMicroBatches, default true) — the same mechanism the
-    #   pre-r15 unordered path already relied on — so the drain is
-    #   2 micro-batches instead of 4. Check the knob so a session that
-    #   disabled it fails loudly here, not with stranded state.
-    ordered = _staged_files_time_ordered(d)
-    if ordered and n_members > 1:
-        trigger_files = 1
-    else:
-        require_no_data_batches(spark)
-        trigger_files = n_members + 2
-    df = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", trigger_files)
-        .parquet(d)
-    )
-    return apply_ns_shim(df) if shim else df
+            os.utime(path, ns=(mt_ns, mt_ns))
+    if len(members) > 1 and _staged_files_time_ordered(d):
+        return 1
+    require_no_data_batches(spark)
+    return len(members) + 2
 
 
 def require_no_data_batches(spark: SparkSession) -> None:
@@ -926,11 +851,9 @@ def stream_join_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_time_range_join,
     )
 
-    # JVM-stateful drain: store machinery, not CPU, is the cost — 8
-    # store instances measured 12.9 → 4.6 s (tools/drain_tuning.py)
-    ev = read_events_stream_flushed(
-        spark, sf_dir, shuffle_partitions=min(8, spark.sparkContext.defaultParallelism)
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     # ONE shared watermark node, then watermark-anchored CASE filters fork
     # the two sides. Two separate withWatermark calls would create two
     # watermark operators whose maxes must BOTH advance for the global
@@ -1022,11 +945,9 @@ def sessionize_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     two events exactly gap apart start a NEW session (windows [t, t+gap)
     merge only when they properly overlap), hence the >= in the oracle's
     session-break predicate."""
-    # JVM-stateful drain: 8 store instances measured 5.0 → 2.5 s
-    # (tools/drain_tuning.py; same reasoning as enrich_stream_stream_join)
-    ev = read_events_stream_flushed(
-        spark, sf_dir, shuffle_partitions=min(8, spark.sparkContext.defaultParallelism)
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     ev = ev.withWatermark("event_time", "1 hour")
     # Drop the sentinel AFTER the watermark node; the CASE-shaped predicate
     # is watermark-anchored so Catalyst can't push it below EventTimeWatermark.
@@ -1074,12 +995,7 @@ def events_weekly_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from example_beam_spark.operators.analytics import drift_from_weekly
     from example_beam_spark.sources import load_table
 
-    # weeks × types JVM windowed agg: store machinery dominates (r14 A/B,
-    # tools/drain_sizing_ab.py: 1.61 s at 32 -> 1.16 s at 8; rows identical)
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    )
+    ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.select(
             F.date_trunc("week", F.col("ts")).cast("date").alias("week"),
@@ -1114,19 +1030,15 @@ def events_funnel_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered event set."""
     from example_beam_spark.streaming.funnel_stream import funnel_stream
 
-    # per-user Python-stateful kernel, light rows: few instances still win
-    # (r14 A/B, tools/drain_sizing_ab.py: 1.94 s at 32 -> 1.76 s at 8).
-    # UNBOUNDED per-user state — instance count derives from estimated
-    # key cardinality (r15): the 8 floor at corpus scale, growing with
-    # keys at production volume.
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=keyed_drain_instances(spark, sf_dir),
-    )
+    ev = read_events_stream(spark, sf_dir)
     keyed = ev.select(
         "user_id", F.col("ts").alias("event_time"), "event_type"
     )
-    per_user = run_to_final(funnel_stream(keyed), ["user_id"], spark)
+    # UNBOUNDED per-user state: sized by keyed_drain_instances (drain doc)
+    per_user = run_to_final(
+        funnel_stream(keyed), ["user_id"], spark,
+        partitions=keyed_drain_instances(spark, sf_dir),
+    )
     return per_user.agg(
         F.count("*").cast("long").alias("n_users"),
         F.count("s1").cast("long").alias("n_signup"),

@@ -15,7 +15,7 @@ happens at the SINK, the production two-output discipline: ONE
 streaming query, one pass over the join state, and each micro-batch
 splits into a matched destination and a DLQ destination
 (streaming/join_stream.py:split_matched — the P6/J6 helper — applied
-per batch inside foreachBatch). Delivery keeps run_to_append's
+per batch inside foreachBatch). Delivery keeps the drain's
 idempotence contract: both destinations live under a per-batch-id
 directory written mode="overwrite", so a batch redelivered after a
 mid-batch crash replaces BOTH sides instead of appending duplicates
@@ -39,9 +39,7 @@ single-query two-sink form is the one that survives 100 TB/day.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,70 +60,41 @@ _JOIN_DLQ_ORACLE = """
 """
 
 
-def _fork_sink(out_dir: str):
-    """foreachBatch delivery with the two-output fork: per batch id,
-    matched rows and DLQ rows land in sibling subdirs under one
-    batch-<id> directory, both mode="overwrite" (idempotent replay —
-    the run_to_append contract, per side)."""
-    from example_beam_spark.streaming.entries import _maybe_fail
+def _write_fork(bdf: DataFrame, root: str) -> None:
+    """Per-batch write of the two-output fork: matched rows and DLQ rows
+    land in sibling subdirs under the batch's dir, both
+    mode="overwrite" (idempotent replay, per side)."""
     from example_beam_spark.streaming.join_stream import split_matched
 
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _maybe_fail(bid)
-        # Persist the delivered micro-batch ONCE: without it, each side's
-        # write re-executes the batch's join plan from the state store —
-        # the two-sink fork paid the upstream work twice (guide §2.4
-        # "don't compute things twice"; r15 sweep showed the DLQ entry
-        # +2.6 s over the single-sink join). The persist/unpersist pair
-        # is batch-scoped, inside the foreachBatch delivery — standard
-        # multi-sink discipline, not a cross-run cache.
-        bdf.persist()
-        try:
-            matched, dlq = split_matched(bdf, "view_event_id")
-            root = os.path.join(out_dir, f"batch-{bid:09d}")
-            matched.withColumn("side", F.lit("matched")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, "matched"))
-            dlq.withColumn("side", F.lit("dlq")).write.mode("overwrite").parquet(
-                os.path.join(root, "dlq")
-            )
-        finally:
-            bdf.unpersist()
-
-    return sink
+    # Persist the delivered micro-batch ONCE: without it, each side's
+    # write re-executes the batch's join plan from the state store —
+    # the two-sink fork paid the upstream work twice (guide §2.4
+    # "don't compute things twice"; r15 sweep showed the DLQ entry
+    # +2.6 s over the single-sink join). The persist/unpersist pair
+    # is batch-scoped, inside the foreachBatch delivery — standard
+    # multi-sink discipline, not a cross-run cache.
+    bdf.persist()
+    try:
+        matched, dlq = split_matched(bdf, "view_event_id")
+        matched.withColumn("side", F.lit("matched")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(root, "matched"))
+        dlq.withColumn("side", F.lit("dlq")).write.mode("overwrite").parquet(
+            os.path.join(root, "dlq")
+        )
+    finally:
+        bdf.unpersist()
 
 
 def run_to_fork(joined: DataFrame, spark: SparkSession) -> DataFrame:
     """Drain the streaming join through the two-sink fork and return
     the union of both destinations (side column tags the origin)."""
-    from example_beam_spark.streaming.entries import (
-        _capture_progress,
-        _drain_dirs,
-        _restore_session,
-    )
+    from example_beam_spark.streaming.entries import drain, read_batches
 
-    out_dir, ckpt, keep_ckpt = _drain_dirs("fork")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(_fork_sink(out_dir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _capture_progress(q)
-    finally:
-        _restore_session(spark)
-    if not keep_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    side_dirs = sorted(
-        glob.glob(os.path.join(glob.escape(out_dir), "batch-*", "*"))
+    out_dir = drain(joined, spark, _write_fork)
+    return read_batches(
+        spark, out_dir, joined.schema.add("side", "string"), "batch-*/*"
     )
-    if not side_dirs:
-        schema = joined.schema.add("side", "string")
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(*side_dirs)
 
 
 @register("enrich_stream_join_dlq", oracle=_JOIN_DLQ_ORACLE)

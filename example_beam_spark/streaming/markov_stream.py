@@ -103,17 +103,14 @@ def events_markov_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_append,
     )
 
-    # light Python-stateful kernel (one row per user): store machinery
-    # dominates, few instances win (r14 interleaved A/B,
-    # tools/drain_sizing_ab.py: 2.9 s at 32 -> 2.6 s at 8). UNBOUNDED
-    # per-user state, so the count derives from estimated key
-    # cardinality (r15): the measured 8-instance floor at corpus scale,
-    # growing with keys at production volume.
-    ev = read_events_stream(
-        spark, sf_dir,
-        shuffle_partitions=keyed_drain_instances(spark, sf_dir),
-    ).select("user_id", "ts", "event_id", "event_type")
-    pairs = run_to_append(markov_pairs_stream(ev), spark)
+    ev = read_events_stream(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "event_type"
+    )
+    # UNBOUNDED per-user state: sized by keyed_drain_instances (drain doc)
+    pairs = run_to_append(
+        markov_pairs_stream(ev), spark,
+        partitions=keyed_drain_instances(spark, sf_dir),
+    )
     cnt = pairs.groupBy("from_type", "to_type").agg(
         F.count("*").cast("long").alias("n")
     )

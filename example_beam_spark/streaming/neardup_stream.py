@@ -42,7 +42,6 @@ scheme as operators/similarity.py:296-316.
 from __future__ import annotations
 
 import os
-import tempfile
 from collections.abc import Iterator
 from typing import Any
 
@@ -116,14 +115,8 @@ def _vector_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     time-sorted parquet with the derived arrival clock."""
     import time
 
-    from example_beam_spark.streaming.entries import _prepare_stream_session
+    from example_beam_spark.streaming.entries import _temp_dir
 
-    # size the state-store instance count for this drain (the Python
-    # kernel is trivial — id/ts list appends — so store machinery
-    # dominates, same profile as the repeat stream: few instances win)
-    _prepare_stream_session(
-        spark, min(8, spark.sparkContext.defaultParallelism)
-    )
     n_chunks = max(1, int(os.environ.get(_VECTOR_CHUNKS_ENV, "1")))
     key = (os.path.abspath(sf_dir), n_chunks, _source_fingerprint(sf_dir))
     d = _STAGE_CACHE.get(key)
@@ -141,7 +134,7 @@ def _vector_stream(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     # single-chunk path kept it (the max+1 discipline of tools/corpora.py)
     id_span = int(stats["max_id"]) + 1 if stats["max_id"] is not None else 0
     if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="stream_src_embeddings_")
+        d = _temp_dir("stream_src_embeddings_")
         staged = emb.withColumn(
             "ts_us",
             (

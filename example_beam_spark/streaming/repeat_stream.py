@@ -230,17 +230,9 @@ def enrich_repeat_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_append,
     )
 
-    # light Python-stateful drain (4 scalars/key, trivial kernel): store
-    # machinery dominates like the JVM-stateful drains, and the r10
-    # tuning matrix measured 8 store instances at 5.7 s vs 6.4 s at 32
-    # (tools/drain_tuning.py --entries enrich_repeat_stream; rows agree
-    # across all cells) — unlike the heavy custom-window kernel, which
-    # needs all cores
-    ev = read_events_stream_flushed(
-        spark,
-        sf_dir,
-        shuffle_partitions=min(8, spark.sparkContext.defaultParallelism),
-    ).withColumnRenamed("ts", "event_time")
+    ev = read_events_stream_flushed(spark, sf_dir).withColumnRenamed(
+        "ts", "event_time"
+    )
     ev = ev.withWatermark("event_time", "1 hour")
     # drop sentinels AFTER the watermark node (unsplittable CASE predicate)
     elements = ev.filter(

@@ -7,7 +7,7 @@ uninterrupted run bit-for-bit — Structured Streaming's exactly-once
 restart contract on the real entries, not a toy aggregation
 (tests/test_checkpoint_resume.py covers the simple-agg case). Run under
 both state-store providers (RocksDB default; in-memory HDFS-backed via
-EBS_STATE_PROVIDER) — the provider binds at checkpoint creation.
+DRAIN_OVERRIDES["provider"]) — the provider binds at checkpoint creation.
 """
 
 from __future__ import annotations
@@ -117,5 +117,7 @@ def test_kill_resume_hdfs_provider(spark, chunked, monkeypatch):
     """Same contract under the in-memory HDFS-backed provider (the
     RocksDB runs above are the production-sizing path; the default
     provider must recover identically)."""
-    monkeypatch.setenv("EBS_STATE_PROVIDER", "hdfs")
+    from example_beam_spark.streaming import entries as E
+
+    monkeypatch.setitem(E.DRAIN_OVERRIDES, "provider", "hdfs")
     _kill_resume(spark, chunked, "sessionize_events_stream")

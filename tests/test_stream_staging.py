@@ -17,6 +17,7 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -165,30 +166,119 @@ def test_flushed_reader_out_of_order_layout_still_flushes(spark, tmp_path, sf_di
     assert got == want
 
 
+# --------------------------------------------------------------------------
+# the drain runner's scoped session conf and temp-dir lifetime
+# --------------------------------------------------------------------------
+
+_DRAIN_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+)
+
+
+def _drain_conf_now(spark):
+    return {k: spark.conf.get(k, None) for k in _DRAIN_KEYS}
+
+
+def _tiny_corpus(tmp_path):
+    d = tmp_path / "corpus"
+    d.mkdir()
+    _write_events_file(d / "events.parquet", EARLY + LATE)
+    return str(d)
+
+
+def _distinct_drain(spark, sf_dir, partitions=None):
+    """A small stateful drain: streaming dropDuplicates over the events."""
+    from example_beam_spark.streaming.entries import (
+        read_events_stream,
+        run_to_append,
+    )
+
+    ev = read_events_stream(spark, sf_dir).select("user_id", "event_type")
+    return run_to_append(
+        ev.dropDuplicates(["user_id", "event_type"]), spark, partitions=partitions
+    )
+
+
+@pytest.mark.parametrize("fail_at", [None, 0], ids=["success", "sink_failure"])
+def test_drain_conf_restored(spark, tmp_path, monkeypatch, fail_at):
+    """Shuffle partitions, provider and changelog conf are the same
+    before and after a drain, whether it succeeds or its sink raises."""
+    from example_beam_spark.streaming import entries as E
+
+    before = _drain_conf_now(spark)
+    if fail_at is None:
+        assert len(_distinct_drain(spark, _tiny_corpus(tmp_path)).collect()) == 4
+    else:
+        monkeypatch.setitem(E.DRAIN_OVERRIDES, "fail_at_batch", fail_at)
+        with pytest.raises(Exception, match="injected sink failure"):
+            _distinct_drain(spark, _tiny_corpus(tmp_path))
+    assert _drain_conf_now(spark) == before
+
+
 def test_collapsed_schedule_without_no_data_batches_raises(spark, tmp_path):
     """A single staged file collapses members and sentinels into one
     batch, whose final flush needs the post-watermark no-data micro-batch:
     with those batches disabled the reader raises (a check that survives
-    ``python -O``) instead of stranding state."""
-    import pytest
+    ``python -O``) instead of stranding state — and, raising before any
+    drain starts, leaves the drain's conf as it was."""
+    from example_beam_spark.streaming.entries import read_events_stream_flushed
 
-    from example_beam_spark.streaming.entries import (
-        _restore_session,
-        read_events_stream_flushed,
-    )
-
-    d = tmp_path / "corpus"
-    d.mkdir()
-    _write_events_file(d / "events.parquet", EARLY)
+    before = _drain_conf_now(spark)
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "false")
     try:
         with pytest.raises(RuntimeError, match="noDataMicroBatches"):
-            read_events_stream_flushed(spark, str(d))
+            read_events_stream_flushed(spark, _tiny_corpus(tmp_path))
     finally:
-        _restore_session(spark)
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+    assert _drain_conf_now(spark) == before
+
+
+def test_drain_binds_requested_shuffle_partitions(spark, tmp_path):
+    """The conf the drain scopes around start() is the one the stateful
+    operator binds, even though the streaming DataFrame was built before
+    the drain set it."""
+    from example_beam_spark.streaming import entries as E
+
+    _distinct_drain(spark, _tiny_corpus(tmp_path), partitions=3).collect()
+    ops = [o for p in E.LAST_PROGRESS for o in p.get("stateOperators") or []]
+    assert ops
+    assert {o["numShufflePartitions"] for o in ops} == {3}
+
+
+def test_staged_and_drain_dirs_removed_at_exit(spark, tmp_path, monkeypatch):
+    """The staged source, drain output and checkpoint dirs are temp dirs
+    whose removal is registered with atexit (the returned DataFrame reads
+    the output lazily, so it cannot go earlier); a drain dir supplied
+    through DRAIN_OVERRIDES is the caller's and is not registered."""
+    import atexit
+    import glob
+
+    from example_beam_spark.streaming import entries as E
+
+    exits = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a: exits.append((fn, a)))
+    sf_dir = _tiny_corpus(tmp_path)
+    staged = E._stage_dir(sf_dir, "events")
+    assert len(_distinct_drain(spark, sf_dir).collect()) == 4
+    registered = {a[0] for _, a in exits}
+    assert staged in registered
+    assert any(os.path.basename(d).startswith("stream_out_") for d in registered)
+
+    supplied = str(tmp_path / "supplied_out")
+    monkeypatch.setitem(E.DRAIN_OVERRIDES, "out_dir", supplied)
+    n = len(exits)
+    _distinct_drain(spark, sf_dir).collect()
+    assert supplied not in {a[0] for _, a in exits[n:]}
+    assert glob.glob(os.path.join(supplied, "batch-*"))
+
+    for fn, a in exits:
+        fn(*a)
+    assert not any(os.path.exists(d) for d in registered)
+    assert os.path.isdir(supplied)
